@@ -35,10 +35,10 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from cdc_rs_spark.functions.transforms import bigquery_json, topic_column
-from cdc_rs_spark.operators.filter import regex_table_filter
+from cdc_rs_spark.operators.filter import table_matches
 from cdc_rs_spark.sources.sinks import publish_foreach_batch
 from cdc_rs_spark.streaming.source import read_change_stream
 
@@ -109,106 +109,119 @@ def apply_transform(
     and so does this. Permissive-mode quarantine rows (op='Malformed')
     bypass the gate and the envelope to a dead-letter topic with their raw
     payload — a poison record is INSPECTABLE downstream, never silently
-    swallowed by a table regex it can't match."""
+    swallowed by a table regex it can't match. Gated DDL markers
+    (op='SchemaChange') route to the schema-change topic with their
+    statement.
+
+    The result is ONE filter and ONE projection over `changes`: the
+    dead-letter and DDL routes are leading `when` branches of the topic
+    and value columns, so the plan holds a single source leaf and each
+    change is decoded once per micro-batch."""
     from pyspark.sql import functions as F
 
-    # Route the dead-letter leg whenever the frame CAN carry Malformed rows
-    # (ADVICE r4): that's any streaming input AND batch change_feed reads
-    # (spark.read.format('change_feed'), mode=permissive, quarantines the
-    # same way). Backfill snapshots are built from typed tables and cannot
-    # carry them — run_backfill_queue passes False so the extra filter leg
-    # doesn't re-scan every snapshot.
+    # Malformed and SchemaChange rows get their own routes whenever the
+    # frame CAN carry them (ADVICE r4): any streaming input AND batch
+    # change_feed reads (spark.read.format('change_feed'), mode=permissive,
+    # quarantines the same way). Backfill snapshots are built from typed
+    # tables and cannot; run_backfill_queue passes False, which only
+    # decides routing — every route reads the same single scan.
     if can_carry_malformed is None:
         can_carry_malformed = (
             changes.isStreaming or cfg.source_format == "change_feed"
         )
-    route_dead = cfg.dead_letter_topic is not None and can_carry_malformed
-    if route_dead:
-        dead = changes.filter(F.col("op") == "Malformed").select(
-            F.lit(cfg.dead_letter_topic).alias("topic"),
+    op = F.col("op")
+    gate = table_matches(cfg.table_regex)
+    row = gate                  # rows that take the envelope
+    routed_rows = F.lit(False)  # rows that take a route below instead
+    routes: list[tuple[Column, str, Column]] = []  # (op test, topic, value)
+    if cfg.dead_letter_topic is not None and can_carry_malformed:
+        routes.append((
+            op == "Malformed",
+            cfg.dead_letter_topic,
             F.to_json(
                 F.struct(
                     F.element_at("after", "raw").alias("raw"),
                     F.col("ts").alias("ts"),
                 )
-            ).alias("value"),
-        )
-        changes = changes.filter(F.col("op") != "Malformed")  # gate sees clean rows
-    # DDL markers take their own leg AFTER the regex gate (an ALTER for an
-    # ignored table is dropped like its rows) and BEFORE the envelope: a
-    # SchemaChange row has no before/after images to envelope — its payload
-    # is the statement itself.
-    route_ddl = cfg.schema_change_topic is not None and can_carry_malformed
-    if route_ddl:
-        ddl = regex_table_filter(
-            changes.filter(F.col("op") == "SchemaChange"), cfg.table_regex
-        ).select(
-            F.lit(cfg.schema_change_topic).alias("topic"),
-            F.to_json(
-                F.struct(
-                    F.col("db"),
-                    F.col("table"),
-                    F.element_at("after", "query").alias("query"),
-                    F.col("ts"),
-                )
-            ).alias("value"),
-        )
+            ),
+        ))
+        routed_rows = routed_rows | (op == "Malformed")
+        row = row & (op != "Malformed")  # the gate sees clean rows
     if can_carry_malformed:
-        # markers leave the row path EITHER WAY (round-5 review): with
-        # schema_change_topic=None they are dropped, never pushed through
-        # the row envelope as a fake UPSERT whose payload is the statement
-        changes = changes.filter(F.col("op") != "SchemaChange")
-    gated = regex_table_filter(changes, cfg.table_regex)
-    if cfg.script is not None:
-        from cdc_rs_spark.functions.rhai import (
-            RhaiScript,
-            rhai_interpret_pipeline,
-            rhai_topic,
-            rhai_transform_json,
-        )
+        # A SchemaChange row has no before/after images to envelope — its
+        # payload is the statement itself. Markers leave the row path
+        # either way (round-5 review): with schema_change_topic=None they
+        # are dropped, never published as a fake UPSERT of the statement.
+        row = row & (op != "SchemaChange")
+        if cfg.schema_change_topic is not None:
+            routes.append((
+                op == "SchemaChange",
+                cfg.schema_change_topic,
+                F.to_json(
+                    F.struct(
+                        F.col("db"),
+                        F.col("table"),
+                        F.element_at("after", "query").alias("query"),
+                        F.col("ts"),
+                    )
+                ),
+            ))
+            # gated like rows: an ALTER for an ignored table is dropped
+            routed_rows = routed_rows | ((op == "SchemaChange") & gate)
 
-        from pyspark.errors import AnalysisException
+    def routed(row_topic: Column, row_value: Column) -> list[Column]:
+        """topic and value with each route as a leading `when` branch."""
+        topic, value = row_topic, row_value
+        for test, route_topic, route_value in reversed(routes):
+            topic = F.when(test, F.lit(route_topic)).otherwise(topic)
+            value = F.when(test, route_value).otherwise(value)
+        return [topic.alias("topic"), value.alias("value")]
 
-        compiled = RhaiScript(cfg.script)  # parse errors surface eagerly
-        try:
-            out = gated.select(
-                rhai_topic(gated, compiled).alias("topic"),
-                rhai_transform_json(gated, compiled).alias("value"),
-            )
-        except TypeError as exc:
-            # A construct the compiler rejects outright: the interpreter
-            # engine runs the script fine (round-6 advice: the documented
-            # engine must actually be WIRED, not a dead-end error message)
-            # — run it per row instead, the same cost model the reference
-            # pays for every script.
-            out = _interpreter_fallback(gated, cfg.script, exc)
-        except AnalysisException as exc:
-            # The script compiled but Catalyst refused the plan. Only the
-            # EXPECTED fallback shape is downgraded to the interpreter:
-            # type mismatches from the loop-to-fold lowering (e.g. an
-            # accumulator initialized as int then mutated with double
-            # arithmetic mismatches aggregate() zero/merge types —
-            # round-6 review). A genuine script bug — a misspelled field
-            # Catalyst flags as unresolved — must NOT silently switch the
-            # stream to per-row mapInPandas, where the same bug resurfaces
-            # as an opaque executor-side failure (round-7 review): re-raise
-            # it here, at plan time, with Catalyst's message intact.
-            cls = exc.getCondition() or ""
-            expected = cls.startswith("DATATYPE_MISMATCH") or (
-                not cls and "DATATYPE_MISMATCH" in str(exc)
-            )
-            if not expected:
-                raise
-            out = _interpreter_fallback(gated, cfg.script, exc)
-    else:
-        out = gated.select(
-            topic_column(cfg.topic_template).alias("topic"),
-            bigquery_json(gated).alias("value"),
+    kept = changes.filter(row | routed_rows)
+    if cfg.script is None:
+        return kept.select(
+            *routed(topic_column(cfg.topic_template), bigquery_json(kept))
         )
-    if route_ddl:
-        out = out.unionByName(ddl)
-    if route_dead:
-        out = out.unionByName(dead)
+    from cdc_rs_spark.functions.rhai import RhaiScript, rhai_topic, rhai_transform_json
+
+    from pyspark.errors import AnalysisException
+
+    compiled = RhaiScript(cfg.script)  # parse errors surface eagerly
+    try:
+        return kept.select(
+            *routed(rhai_topic(kept, compiled), rhai_transform_json(kept, compiled))
+        )
+    except TypeError as exc:
+        # A construct the compiler rejects outright: the interpreter
+        # engine runs the script fine (round-6 advice: the documented
+        # engine must actually be WIRED, not a dead-end error message)
+        # — run it per row instead, the same cost model the reference
+        # pays for every script.
+        fallback = exc
+    except AnalysisException as exc:
+        # The script compiled but Catalyst refused the plan. Only the
+        # EXPECTED fallback shape is downgraded to the interpreter:
+        # type mismatches from the loop-to-fold lowering (e.g. an
+        # accumulator initialized as int then mutated with double
+        # arithmetic mismatches aggregate() zero/merge types —
+        # round-6 review). A genuine script bug — a misspelled field
+        # Catalyst flags as unresolved — must NOT silently switch the
+        # stream to per-row mapInPandas, where the same bug resurfaces
+        # as an opaque executor-side failure (round-7 review): re-raise
+        # it here, at plan time, with Catalyst's message intact.
+        cls = exc.getCondition() or ""
+        expected = cls.startswith("DATATYPE_MISMATCH") or (
+            not cls and "DATATYPE_MISMATCH" in str(exc)
+        )
+        if not expected:
+            raise
+        fallback = exc
+    out = _interpreter_fallback(changes.filter(row), cfg.script, fallback)
+    if routes:
+        # mapInPandas returns a frame, not Columns, so this degraded path
+        # alone unions its rows with the routed ones (a second scan)
+        none = F.lit(None).cast("string")
+        out = out.unionByName(changes.filter(routed_rows).select(*routed(none, none)))
     return out
 
 

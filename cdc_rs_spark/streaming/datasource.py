@@ -23,10 +23,15 @@ offset authority:
 
 Binlog file semantics are preserved: files are append-only, only the LAST
 (sorted) file may grow, rotation = a new file appears. `latestOffset()` (a
-driver-side call) therefore only ever counts the tail file; frozen files'
-record counts are discovered once at plan time and sliced into one
-InputPartition each, so a backlog of N files is consumed by N parallel
-executor tasks, not a driver loop.
+driver-side call) counts the records of the tail file and, under
+maxRecordsPerBatch, of every file its admission budget walks. Each count is
+memoized per reader on the file's `(st_size, st_mtime_ns)`: an append-only
+file whose size is unchanged holds the same records, so a growing tail is
+recounted and a frozen file is counted once per reader lifetime (for a
+`.binlog` file, counting is a full decode). The memo holds only files of
+the current listing. Each planned batch is sliced into one InputPartition
+per file, so a backlog of N files is consumed by N parallel executor
+tasks, not a driver loop.
 
 Driver-side listing uses the local filesystem — in production the same class
 points at an object-store listing or a real binlog client; the protocol
@@ -271,6 +276,8 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
         )
         self._listed_names: set[str] = set()
         self._anchor: dict | None = None
+        # path -> ((st_size, st_mtime_ns), record count); see _count
+        self._counts: dict[str, tuple[tuple[int, int], int]] = {}
 
     @staticmethod
     def _tup(o: dict) -> tuple:
@@ -328,8 +335,21 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
 
             logging.getLogger(__name__).error(msg)
 
+    def _count(self, fp: str) -> int:
+        """_count_records, memoized on the file's (size, mtime): feed files
+        are append-only, so an unchanged size means unchanged records."""
+        st = os.stat(fp)
+        key = (st.st_size, st.st_mtime_ns)
+        hit = self._counts.get(fp)
+        if hit is not None and hit[0] == key:
+            return hit[1]
+        n = _count_records(fp, self.permissive)
+        self._counts[fp] = (key, n)
+        return n
+
     def latestOffset(self) -> dict:
         files = _list_files(self.path)
+        self._counts = {fp: self._counts[fp] for fp in files if fp in self._counts}
         self._flag_late_arrivals(
             files, self._anchor["file"] if self._anchor else ""
         )
@@ -338,7 +358,7 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
             # empty (fully GC'd) directory means "no new data", not "rewind"
             return dict(self._anchor) if self._anchor else {"file": "", "pos": 0}
         tail_name = os.path.basename(files[-1])
-        tail = {"file": tail_name, "pos": _count_records(files[-1], self.permissive)}
+        tail = {"file": tail_name, "pos": self._count(files[-1])}
         if self.max_records is None or self._anchor is None:
             return tail
         budget = self.max_records
@@ -348,9 +368,7 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
             if name < aname:
                 continue  # fully consumed (committed prefix, maybe pre-GC)
             pos = apos if name == aname else 0
-            avail = (
-                tail["pos"] if name == tail_name else _count_records(fp, self.permissive)
-            ) - pos
+            avail = (tail["pos"] if name == tail_name else self._count(fp)) - pos
             if avail > budget:
                 return {"file": name, "pos": pos + budget}
             budget -= avail
@@ -412,6 +430,7 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
                     os.remove(fp)
                 except OSError:
                     pass  # concurrent cleanup loses the race harmlessly
+                self._counts.pop(fp, None)
 
 
 class ChangeFeedBatchReader(DataSourceReader):

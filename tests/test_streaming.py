@@ -2100,3 +2100,251 @@ def test_funnel_retraction_replay_idempotent(spark, tmp_path):
     # replay through a fresh checkpoint: both ledgers absorb it
     run_stream(str(tmp_path / "ckpt2"))
     assert snapshot() == s1
+
+
+# ---- one scan per micro-batch: routing, read amplification, count memo ----
+
+
+def _three_leg_transform(changes, cfg, can_carry_malformed, interpret=False):
+    """Reference form of pipeline.apply_transform: dead-letter, DDL and row
+    legs each filtered from `changes` and unioned; `interpret` runs the
+    script's row leg on the per-row interpreter. apply_transform must
+    publish the same row multiset."""
+    from cdc_rs_spark.functions.rhai import (
+        rhai_interpret_pipeline, rhai_topic, rhai_transform_json,
+    )
+    from cdc_rs_spark.functions.transforms import bigquery_json, topic_column
+    from cdc_rs_spark.operators.filter import regex_table_filter
+
+    route_dead = cfg.dead_letter_topic is not None and can_carry_malformed
+    if route_dead:
+        dead = changes.filter(F.col("op") == "Malformed").select(
+            F.lit(cfg.dead_letter_topic).alias("topic"),
+            F.to_json(F.struct(
+                F.element_at("after", "raw").alias("raw"), F.col("ts").alias("ts"),
+            )).alias("value"),
+        )
+        changes = changes.filter(F.col("op") != "Malformed")
+    route_ddl = cfg.schema_change_topic is not None and can_carry_malformed
+    if route_ddl:
+        ddl = regex_table_filter(
+            changes.filter(F.col("op") == "SchemaChange"), cfg.table_regex
+        ).select(
+            F.lit(cfg.schema_change_topic).alias("topic"),
+            F.to_json(F.struct(
+                F.col("db"), F.col("table"),
+                F.element_at("after", "query").alias("query"), F.col("ts"),
+            )).alias("value"),
+        )
+    if can_carry_malformed:
+        changes = changes.filter(F.col("op") != "SchemaChange")
+    gated = regex_table_filter(changes, cfg.table_regex)
+    if cfg.script is None:
+        out = gated.select(
+            topic_column(cfg.topic_template).alias("topic"),
+            bigquery_json(gated).alias("value"),
+        )
+    elif interpret:
+        out = rhai_interpret_pipeline(gated, cfg.script)
+    else:
+        out = gated.select(
+            rhai_topic(gated, cfg.script).alias("topic"),
+            rhai_transform_json(gated, cfg.script).alias("value"),
+        )
+    if route_ddl:
+        out = out.unionByName(ddl)
+    if route_dead:
+        out = out.unionByName(dead)
+    return out
+
+
+@pytest.mark.parametrize("table_regex", [r"^testdb\.orders$", ".*"])
+@pytest.mark.parametrize("can_carry", [True, False])
+@pytest.mark.parametrize("ddl_topic", ["schemachanges", None])
+@pytest.mark.parametrize("dead_topic", ["deadletter", None])
+def test_single_scan_routing_matches_three_leg_union(
+    spark, dead_topic, ddl_topic, can_carry, table_regex
+):
+    """apply_transform's one filter + one projection routes every op the
+    way the three-leg union did, for every combination of the dead-letter
+    topic, the schema-change topic, can_carry_malformed and the gate, on
+    the envelope template, a compiled script and a script that falls back
+    to the per-row interpreter."""
+    from collections import Counter
+
+    import cdc_rs_spark.pipeline as pipeline_mod
+    from cdc_rs_spark.envelope import CHANGE_SCHEMA
+    from cdc_rs_spark.pipeline import PipelineConfig, apply_transform
+    from cdc_rs_spark.plans.cdc import RHAI_DEMO_SCRIPT
+
+    # a field write inside a runtime-bound loop leaves the compiled subset
+    interpreted = """
+    fn transform(db, table, op, before, after, ts) {
+        let m = if op == "Delete" { before } else { after };
+        let i = 0;
+        while i < ts { m.hops = `${i + 1}`; i = i + 1; }
+        m
+    }
+    fn topic(db, table) { `${db}.${table}` }
+    """
+
+    rows = []
+    for i, table in enumerate(["orders", "ignored"]):
+        k = str(10 * i)
+        rows += [
+            ("Insert", "testdb", table, None, {"id": k, "v": "a"}, 1, "id"),
+            ("Update", "testdb", table, {"id": k, "v": "a"}, {"id": k, "v": "b"}, 2, "id"),
+            ("Delete", "testdb", table, {"id": k, "v": "b"}, None, 3, "id"),
+            ("SchemaChange", "testdb", table, None,
+             {"query": f"ALTER TABLE {table} ADD COLUMN c INT"}, 4, ""),
+        ]
+    rows.append(("Malformed", "", "", None, {"raw": "{not json"}, 0, ""))
+    changes = spark.createDataFrame(rows, CHANGE_SCHEMA)
+    for script in (None, RHAI_DEMO_SCRIPT, interpreted):
+        cfg = PipelineConfig(
+            source_path="/nonexistent", checkpoint_dir="/nonexistent",
+            table_regex=table_regex, script=script,
+            dead_letter_topic=dead_topic, schema_change_topic=ddl_topic,
+        )
+        fallbacks = pipeline_mod.INTERPRETER_FALLBACKS
+        got = apply_transform(changes, cfg, can_carry_malformed=can_carry)
+        interpret = pipeline_mod.INTERPRETER_FALLBACKS > fallbacks
+        assert interpret == (script is interpreted)
+        want = _three_leg_transform(changes, cfg, can_carry, interpret)
+        assert Counter(map(tuple, got.collect())) == Counter(
+            map(tuple, want.collect())
+        ), script
+
+
+def _streaming_leaves(df) -> list[str]:
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def _binlog_with_ddl() -> bytes:
+    """5 testdb.orders row changes, then one gated ALTER marker."""
+    from tests.test_binlog import _feed, _query_event
+
+    return _feed(False) + _query_event(
+        b"testdb", b"ALTER TABLE orders ADD COLUMN note TEXT", ts=1010
+    )
+
+
+def test_change_feed_pipeline_reads_each_record_once(spark, tmp_path):
+    """The change-feed pipeline plan holds ONE streaming source leaf, and
+    the micro-batches read each record once: summed numInputRows equals
+    the records in the feed (read amplification 1.0), for a failfast
+    run_pipeline_once over JSON rows plus a binlog with a DDL marker, and
+    for a permissive read that also quarantines a malformed line."""
+    from cdc_rs_spark.pipeline import (
+        PipelineConfig, apply_transform, build_stream, run_pipeline_once,
+    )
+    from cdc_rs_spark.sources.sinks import publish_foreach_batch
+
+    src = str(tmp_path / "feed")
+    _write_changes(src, "bin.000001.json", [_chg("Insert", str(i), "v", i) for i in range(4)])
+    with open(os.path.join(src, "bin.000002.binlog"), "wb") as f:
+        f.write(_binlog_with_ddl())
+    cfg = PipelineConfig(
+        source_path=src, checkpoint_dir=str(tmp_path / "ckpt"),
+        table_regex=r"^testdb\.(t|orders)$", source_format="change_feed",
+        max_records_per_batch=3,
+    )
+    assert len(_streaming_leaves(build_stream(spark, cfg))) == 1
+    q = run_pipeline_once(spark, cfg)
+    assert sum(p.numInputRows for p in q.recentProgress) == 4 + 6
+
+    with open(os.path.join(src, "bin.000003.json"), "w") as f:
+        f.write("{this is not json\n")
+    changes = (
+        spark.readStream.format("change_feed")
+        .option("path", src).option("mode", "permissive").load()
+    )
+    frames = apply_transform(changes, cfg)
+    assert len(_streaming_leaves(frames)) == 1
+    out: list = []
+    q = (
+        frames.writeStream.foreachBatch(
+            lambda bdf, bid: out.extend(r["topic"] for r in bdf.collect())
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt2"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert sum(p.numInputRows for p in q.recentProgress) == 4 + 6 + 1
+    assert sorted(set(out)) == [
+        "cdc.testdb.orders", "cdc.testdb.t", "deadletter", "schemachanges",
+    ]
+    assert len(out) == 4 + 6 + 1
+
+
+def test_change_feed_latest_offset_counts_each_frozen_file_once(tmp_path, monkeypatch):
+    """latestOffset memoizes record counts on (size, mtime): across many
+    capped latestOffset -> partitions cycles each frozen file is counted
+    once, an append to the tail recounts the tail alone and shows at once,
+    and with gcCommitted the memo drops deleted files."""
+    from collections import Counter
+
+    from cdc_rs_spark.streaming import datasource
+    from tests.test_binlog import _feed
+
+    calls: Counter = Counter()
+    real = datasource._count_records
+
+    def counting(fp, permissive=False):
+        calls[os.path.basename(fp)] += 1
+        return real(fp, permissive)
+
+    monkeypatch.setattr(datasource, "_count_records", counting)
+
+    def backlog(src: str) -> list[str]:
+        os.makedirs(src)
+        names = []
+        for i in range(5):  # JSON at both ends, so the tail can grow
+            name = f"bin.{i:06d}." + ("binlog" if i % 2 else "json")
+            if i % 2:
+                with open(os.path.join(src, name), "wb") as f:
+                    f.write(_feed(False))  # 5 records
+            else:
+                _write_changes(src, name, [_chg("Insert", str(j), "v", j) for j in range(5)])
+            names.append(name)
+        return names
+
+    def drain(reader, start):
+        """latestOffset -> partitions until caught up, then idle polls."""
+        for _ in range(30):
+            end = reader.latestOffset()
+            if end == start:
+                break
+            assert reader.partitions(start, end)
+            start = end
+        for _ in range(3):
+            assert reader.latestOffset() == start
+        return start
+
+    src = str(tmp_path / "feed")
+    names = backlog(src)
+    reader = datasource.ChangeFeedStreamReader(
+        {"path": src, "maxRecordsPerBatch": "3"}
+    )
+    end = drain(reader, reader.initialOffset())
+    assert end == {"file": names[-1], "pos": 5}
+    assert calls == Counter({n: 1 for n in names})
+
+    with open(os.path.join(src, names[-1]), "a") as f:
+        f.write(json.dumps(_chg("Insert", "9", "v", 9)) + "\n")
+    calls.clear()
+    assert drain(reader, end) == {"file": names[-1], "pos": 6}
+    assert calls == Counter({names[-1]: 1})
+
+    gc_src = str(tmp_path / "gc")
+    gc_names = backlog(gc_src)
+    gc_reader = datasource.ChangeFeedStreamReader(
+        {"path": gc_src, "maxRecordsPerBatch": "3", "gcCommitted": "true"}
+    )
+    end = drain(gc_reader, gc_reader.initialOffset())
+    gc_reader.commit(end)
+    left = set(os.listdir(gc_src))
+    assert left == {gc_names[-1]}
+    assert {os.path.basename(fp) for fp in gc_reader._counts} <= left
