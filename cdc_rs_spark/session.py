@@ -12,9 +12,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 24g, so the default heap fits the
+    host alongside the Python workers."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(ram_mb // 2, 24 * 1024)}m"
 
 
 def get_spark(app_name: str = "cdc-rs-spark", cpus: int | None = None) -> SparkSession:
@@ -30,11 +35,14 @@ def get_spark(app_name: str = "cdc-rs-spark", cpus: int | None = None) -> SparkS
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet stores TIMESTAMP(NANOS) which Spark has no native
-        # type for; read as long nanos and convert in load() (micros trunc,
-        # matching DuckDB's nanos->micros read).
+        # a TIMESTAMP(NANOS) parquet column, which Spark has no type for,
+        # reads as long nanos instead of failing the read: a backfill
+        # (sources/backfill.py) reads any user table, e.g. one pandas wrote
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # catalog tables (bucketed-join support) live outside the repo
         .config(
             "spark.sql.warehouse.dir",
@@ -87,18 +95,44 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# The fixture tables' schemas, as Spark infers them from the files. A read
+# with a declared schema runs no Spark job; an inferring read runs one per
+# call. Timestamps are stored as TIMESTAMP(MICROS, isAdjustedToUTC=false),
+# hence timestamp_ntz.
+FIXTURE_SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, "
+    "c_acctbal double, c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, "
+    "s_acctbal double",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, "
+    "p_size int, p_retailprice double",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+    "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
+    "l_linenumber int, l_quantity double, l_extendedprice double, "
+    "l_discount double, l_tax double, l_returnflag string, "
+    "l_linestatus string, l_shipdate timestamp_ntz",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, "
+    "event_type string, value double, props string",
+    "documents": "doc_id bigint, text string, lang string, source string, "
+    "n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
+
 def load(spark: SparkSession, sf_dir: str, name: str):
     """Read one fixture table. Column pruning + predicate pushdown reach the
     parquet scan because this stays a plain declarative read.
 
-    events.ts is TIMESTAMP(NANOS) in the file — surfaced as long nanos by
-    the nanosAsLong flag and converted here to a micros timestamp with
-    integer division (a double division would lose ~100ns of precision at
-    2024 epoch-nanos magnitudes)."""
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return df
+    The table reads with its declared schema from FIXTURE_SCHEMAS, so the
+    read runs no Spark job; a column the file lacks reads as NULL. Only the
+    fixture tables load here: a backfill, which may name any relation,
+    reads its table with spark.read.parquet and keeps the file's columns."""
+    return spark.read.schema(FIXTURE_SCHEMAS[name]).parquet(
+        table_path(sf_dir, name)
+    )
 
 
 def sql_literal(v) -> str:

@@ -30,7 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from cdc_rs_spark.envelope import snapshot_changes
-from cdc_rs_spark.session import load
+from cdc_rs_spark.session import table_path
 
 STATUS_TODO = "todo"
 STATUS_DONE = "done"
@@ -124,15 +124,17 @@ class BackfillQueue:
 def snapshot_table(
     spark: SparkSession, sf_dir: str, job: BackfillJob
 ) -> DataFrame:
-    """Run one backfill job against the parquet fixtures: partitioned scan ->
-    Backfill change stream. The projection (`selection`) reaches the parquet
+    """Run one backfill job against a parquet table directory: partitioned
+    scan -> Backfill change stream. The relation may be any table, so its
+    columns are read from the file, not from session.FIXTURE_SCHEMAS. The
+    projection (`selection`) reaches the parquet
     reader via Catalyst column pruning — the analog of interpolating
     `{selection}` into the SELECT (src/main.rs:326,331) — and a ranged job's
     pkey bounds push down as scan predicates (the finished form of the
     reference's unused `range` column)."""
     from pyspark.sql import functions as F
 
-    df = load(spark, sf_dir, job.relation)
+    df = spark.read.parquet(table_path(sf_dir, job.relation))
     bounds = job.range_bounds()
     if bounds is not None:
         lo, hi = bounds
@@ -162,7 +164,7 @@ def plan_ranges(
     independently: a crash mid-backfill loses at most one shard's work."""
     from pyspark.sql import functions as F
 
-    row = load(spark, sf_dir, relation).agg(
+    row = spark.read.parquet(table_path(sf_dir, relation)).agg(
         F.min(pkey).cast("bigint"), F.max(pkey).cast("bigint")
     ).first()
     if row[0] is None:

@@ -451,6 +451,9 @@ def _group_path(sig_store_path: str, group_store_path: str | None) -> str:
 
 
 _GROUP_SCHEMA = "gkey string, doc_id bigint, delegate boolean"
+# rows of the band store (band_explode's output) and of the shingle store
+_SIG_SCHEMA = "doc_id bigint, band int, bkey string"
+_SH_SCHEMA = "doc_id bigint, sh array<string>"
 
 
 def _gkey(text_col: str = "text") -> F.Column:
@@ -976,8 +979,8 @@ def remove_docs(
                 "member to a singleton); restore the store or pass "
                 "sig_store_path=None to assert it never existed"
             )
-        sig_all = spark.read.parquet(sig_cur)
-        sh_all = spark.read.parquet(sh_cur)
+        sig_all = spark.read.schema(_SIG_SCHEMA).parquet(sig_cur)
+        sh_all = spark.read.schema(_SH_SCHEMA).parquet(sh_cur)
         gcur = _resolve_store(_group_path(sig_store_path, group_store_path))
         if os.path.isdir(gcur):
             gs = spark.read.schema(_GROUP_SCHEMA).parquet(gcur)
@@ -1062,8 +1065,8 @@ def remove_docs(
                     [(r["gkey"], r["hub"], True) for r in need_rows],
                     _GROUP_SCHEMA,
                 ).write.mode("append").parquet(gcur)
-                sig_all = spark.read.parquet(sig_cur)
-                sh_all = spark.read.parquet(sh_cur)
+                sig_all = spark.read.schema(_SIG_SCHEMA).parquet(sig_cur)
+                sh_all = spark.read.schema(_SH_SCHEMA).parquet(sh_cur)
             reps = (
                 live_dels.select("doc_id")
                 .unionByName(
@@ -1846,7 +1849,7 @@ def clusters_foreach_batch(
                 # created only after that store's append has committed —
                 # sig here (its append just finished), sh below, after
                 # the parallel block joins.
-                sig_store = spark.read.parquet(sig_cur)
+                sig_store = spark.read.schema(_SIG_SCHEMA).parquet(sig_cur)
                 probe_bands = band_explode(signed.select("doc_id", "sig"))
 
                 def _append_sh() -> None:
@@ -1887,7 +1890,7 @@ def clusters_foreach_batch(
                 # created HERE, after the sh append: the listing snapshot
                 # must include the batch's own shingle rows, or the
                 # verify/prefix reads silently drop this batch's pairs
-                sh_store = spark.read.parquet(sh_cur)
+                sh_store = spark.read.schema(_SH_SCHEMA).parquet(sh_cur)
                 # group rows append AFTER sig+sh are durable (ADVICE r11
                 # high — the group append is the commit point gating the
                 # band rows; see the ordering comment above). It OVERLAPS

@@ -11,6 +11,9 @@ fixed RATES (so dup density is scale-invariant), and unit-norm 64-dim
 label-clustered float vectors.
 
 Usage: python tools/gen_scale_fixtures.py <n_docs> <n_vecs> <out_dir>
+
+Each table is written with the column layout that
+`cdc_rs_spark.session.FIXTURE_SCHEMAS` declares for it.
 """
 
 from __future__ import annotations
@@ -21,6 +24,10 @@ import sys
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from cdc_rs_spark.session import FIXTURE_SCHEMAS  # noqa: E402
 
 VOCAB = [
     "a", "agg", "batch", "big", "column", "customer", "data", "dup", "fast",
@@ -178,6 +185,29 @@ def gen_events(n: int, rng: np.random.Generator) -> pa.Table:
     )
 
 
+# arrow types of the Spark DDL types FIXTURE_SCHEMAS uses for these tables
+_ARROW_TYPES = {
+    "int": pa.int32(),
+    "bigint": pa.int64(),
+    "double": pa.float64(),
+    "string": pa.string(),
+    "timestamp_ntz": pa.timestamp("us"),
+    "array<float>": pa.list_(pa.float32()),
+}
+
+
+def fixture_schema(name: str) -> pa.Schema:
+    """The arrow schema of FIXTURE_SCHEMAS[name] (`col type, col type`)."""
+    cols = (f.split(" ") for f in FIXTURE_SCHEMAS[name].split(", "))
+    return pa.schema([(col, _ARROW_TYPES[typ]) for col, typ in cols])
+
+
+def write_fixture(table: pa.Table, out: str, name: str) -> None:
+    pq.write_table(
+        table.cast(fixture_schema(name)), os.path.join(out, f"{name}.parquet")
+    )
+
+
 def main() -> int:
     n_docs, n_vecs, out = int(sys.argv[1]), int(sys.argv[2]), sys.argv[3]
     n_events = int(sys.argv[4]) if len(sys.argv) > 4 else 0
@@ -185,13 +215,13 @@ def main() -> int:
     near_template_families = int(sys.argv[6]) if len(sys.argv) > 6 else 0
     os.makedirs(out, exist_ok=True)
     rng = np.random.default_rng(42)
-    pq.write_table(
+    write_fixture(
         gen_documents(n_docs, rng, boilerplate_rate, near_template_families),
-        os.path.join(out, "documents.parquet"),
+        out, "documents",
     )
-    pq.write_table(gen_embeddings(n_vecs, rng), os.path.join(out, "embeddings.parquet"))
+    write_fixture(gen_embeddings(n_vecs, rng), out, "embeddings")
     if n_events:
-        pq.write_table(gen_events(n_events, rng), os.path.join(out, "events.parquet"))
+        write_fixture(gen_events(n_events, rng), out, "events")
     print(f"wrote {n_docs} docs / {n_vecs} vecs / {n_events} events to {out}")
     return 0
 
