@@ -1731,10 +1731,10 @@ def gdpr_forget_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, text string, shard bigint"
         ).parquet(purged_shards)
 
-        from cdc_rs_spark.streaming.clusters import _resolve_store
+        from cdc_rs_spark.streaming.store import resolve_store
 
         # post-purge reads resolve through the atomic swap pointer
-        band_live = spark.read.parquet(_resolve_store(sig_path))
+        band_live = spark.read.parquet(resolve_store(sig_path))
 
         # ONE pass per store (round 13, VERDICT r12 next #5): the old
         # report scanned every store twice within the collect — a
@@ -2042,7 +2042,6 @@ def gdpr_forget_end_to_end_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from cdc_rs_spark.streaming.clusters import (
         _GROUP_SCHEMA,
-        _resolve_store,
         clusters_foreach_batch,
         init_cluster_store,
         live_cluster_map,
@@ -2064,6 +2063,7 @@ def gdpr_forget_end_to_end_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         remove_docs_from_span_store,
         span_keys,
     )
+    from cdc_rs_spark.streaming.store import resolve_store
 
     d = spread(load(spark, sf_dir, "documents")).select(
         "doc_id", "text", "lang", "source"
@@ -2129,7 +2129,7 @@ def gdpr_forget_end_to_end_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
                     1,
                 )
                 gs = spark.read.schema(_GROUP_SCHEMA).parquet(
-                    _resolve_store(sig_path + "_groups")
+                    resolve_store(sig_path + "_groups")
                 )
                 # ONE pass over the group store for all three counts
                 # (round 13b): the old form ran three separate
@@ -2315,10 +2315,10 @@ def gdpr_forget_end_to_end_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         shards_back = spark.read.schema(
             "doc_id long, text string, shard bigint"
         ).parquet(purged_shards)
-        band_live = spark.read.parquet(_resolve_store(sig_path))
+        band_live = spark.read.parquet(resolve_store(sig_path))
         gs_live = (
             spark.read.schema(_GROUP_SCHEMA)
-            .parquet(_resolve_store(sig_path + "_groups"))
+            .parquet(resolve_store(sig_path + "_groups"))
             .select("gkey", "doc_id")
             .distinct()
         )

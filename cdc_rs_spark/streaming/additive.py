@@ -1,4 +1,4 @@
-"""Generic log-structured MONOID-STATE store — the shared machinery
+"""Generic log-structured MONOID-STATE store: the shared machinery
 behind every streaming surface here whose state merges by an
 associative, commutative, order-independent bigint monoid: SUM
 (classifier sufficient statistics, count-min sketch grids, counter
@@ -7,20 +7,14 @@ aggregates append as immutable segments, reads fold the monoid across
 segments, and compaction rewrites the folded table into a new epoch.
 
 Why SUM-mergeable state gets its own store: it is the one state algebra
-where the streaming form is EXACT by construction — segment boundaries
+where the streaming form is EXACT by construction. Segment boundaries
 are invisible under an associative, commutative, order-independent merge
 (integer addition), so the served state equals the batch computation on
-the unioned input, always. The disciplines are the ones every store in
-this package shares (streaming/ivf.py's epoch scheme, the round-8
-append-first lesson):
+the unioned input, always. Ledger, publication and retention follow
+streaming/store.py; this store adds:
 
-  - idempotence: a batch at or below its stream's committed ledger line
-    is skipped; a retry of a crashed fold purges its own ingest=TAG
+  - purge on retry: a retry of a crashed fold purges its own ingest=TAG
     partition directory before re-appending;
-  - publication: compaction writes a NEW `seg-EEEEEE/` epoch directory
-    and flips the meta sidecar atomically; superseded epochs expire
-    after keep_epochs further compactions (in-flight readers keep their
-    snapshotted files);
   - bootstrap: the store is born with an empty epoch-0 segment table so
     first reads need no existence special-case.
 
@@ -30,30 +24,23 @@ Layout: root/seg-EEEEEE/ (parquet, PARTITIONED BY ingest) + _add_meta.json
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from cdc_rs_spark.streaming.store import (
+    expire_epochs,
+    ledger_done,
+    publish,
+    read_sidecar,
+    uncommitted_tags,
+    write_sidecar,
+)
+
 _META = "_add_meta.json"
-
-
-def _meta_path(root: str) -> str:
-    return os.path.join(root, _META)
-
-
-def _read_meta(root: str) -> dict:
-    with open(_meta_path(root)) as f:
-        return json.load(f)
-
-
-def _write_meta(root: str, meta: dict) -> None:
-    tmp = _meta_path(root) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, _meta_path(root))
+_SEG_EPOCH = r"seg-(\d+)"
 
 
 def _seg_path(root: str, epoch: int) -> str:
@@ -105,18 +92,18 @@ def init_additive_store(
         # inference rejects — explicit-schema reads stay robust
         "schema": schema,
     }
-    _write_meta(root, meta)
+    write_sidecar(root, _META, meta)
     return meta
 
 
-def _read_seg(spark: SparkSession, root: str, epoch: int) -> DataFrame:
-    """Epoch segment read with the meta-recorded schema when available
-    (pre-round-11 stores fall back to inference)."""
-    meta = _read_meta(root)
+def _read_seg(spark: SparkSession, root: str, meta: dict) -> DataFrame:
+    """The live epoch's segments, read with the meta-recorded schema
+    when available (stores written before the `schema` key existed fall
+    back to inference)."""
     reader = spark.read
     if meta.get("schema"):
         reader = reader.schema(meta["schema"])
-    return reader.parquet(_seg_path(root, epoch))
+    return reader.parquet(_seg_path(root, int(meta["epoch"])))
 
 
 def _purge_ingest(seg_path: str, ingest: str) -> None:
@@ -138,11 +125,8 @@ def fold_segment(
     column's SUM instead of the row count (the column itself is dropped
     before the write — it is a reporting vehicle riding the write job,
     not state)."""
-    meta = _read_meta(root)
-    ledger = meta.get("last_batch_by_stream") or {}
-    if batch_id is not None and int(batch_id) <= int(
-        ledger.get(stream_id, -1)
-    ):
+    meta = read_sidecar(root, _META)
+    if ledger_done(meta, stream_id, batch_id):
         return {"n_keys": 0, "skipped_duplicate": True}
     path = _seg_path(root, int(meta["epoch"]))
     ingest = (
@@ -151,8 +135,6 @@ def fold_segment(
         else f"f-{int(meta['seq']) + 1}"
     )
     _purge_ingest(path, ingest)  # crashed prior attempt's residue
-    from pyspark.sql import Observation
-
     obs = Observation()
     measure = (
         F.sum(volume_col) if volume_col else F.count(F.lit(1))
@@ -169,15 +151,10 @@ def fold_segment(
     )
     got = obs.get["n"]
     n = int(got) if got is not None else 0
-    meta = _read_meta(root)  # ledger commit strictly after the append
-    if batch_id is not None:
-        led = dict(meta.get("last_batch_by_stream") or {})
-        led[stream_id] = max(int(led.get(stream_id, -1)), int(batch_id))
-        meta["last_batch_by_stream"] = led
-    else:
-        meta["seq"] = int(meta["seq"]) + 1
-    meta["n_folds"] = int(meta["n_folds"]) + 1
-    _write_meta(root, meta)
+    publish(
+        root, _META, key=stream_id, batch_id=batch_id,
+        bump=("n_folds",) if batch_id is not None else ("n_folds", "seq"),
+    )
     return {"n_keys": n, "skipped_duplicate": False}
 
 
@@ -206,7 +183,7 @@ def retract_segment(
     pass the SAME partial they would have folded for the insert (built
     from the delete's before-image); negation happens here so call
     sites read symmetrically."""
-    meta = _read_meta(root)
+    meta = read_sidecar(root, _META)
     if meta.get("merge", "sum") != "sum":
         raise ValueError(
             "retract_segment requires the SUM monoid (a group); "
@@ -228,18 +205,11 @@ def retract_segment(
     )
 
 
-def _merged(spark: SparkSession, root: str, epoch: int) -> DataFrame:
-    meta = _read_meta(root)
+def _fold_keys(df: DataFrame, meta: dict) -> DataFrame:
+    """The store's monoid folded per key."""
     op = _merge_fn(meta)
-    return (
-        _read_seg(spark, root, epoch)
-        .groupBy(*meta["key_cols"])
-        .agg(
-            *[
-                op(c).cast("bigint").alias(c)
-                for c in meta["sum_cols"]
-            ]
-        )
+    return df.groupBy(*meta["key_cols"]).agg(
+        *[op(c).cast("bigint").alias(c) for c in meta["sum_cols"]]
     )
 
 
@@ -247,38 +217,8 @@ def read_merged(spark: SparkSession, root: str) -> DataFrame:
     """The merged state: the monoid folded across segments, one
     map-side-combinable aggregation over |keys| x n_segments rows
     (bounded by compaction cadence)."""
-    return _merged(spark, root, int(_read_meta(root)["epoch"]))
-
-
-def _uncommitted_mask(meta: dict) -> F.Column:
-    """True for segment rows whose ingest tag sits ABOVE its stream's
-    committed ledger line — a crashed fold's residue a retry will purge.
-    Compaction and rebuild both PRESERVE those partitions verbatim:
-    folding them into state would launder the residue, and the retry's
-    re-append would then double-count (the streaming/ivf.py round-7/8
-    lesson)."""
-    ledger = meta.get("last_batch_by_stream") or {}
-    seq_committed = int(meta.get("seq", 0))
-    sid = F.regexp_extract("ingest", r"^(.+)-(\d+)$", 1)
-    bid = F.regexp_extract("ingest", r"^(.+)-(\d+)$", 2)
-    bid_i = F.when(bid != F.lit(""), bid.cast("bigint"))
-    if ledger:
-        commap = F.create_map(
-            *[
-                x
-                for k, v in sorted(ledger.items())
-                for x in (F.lit(k), F.lit(int(v)))
-            ]
-        )
-        committed = F.coalesce(F.element_at(commap, sid), F.lit(-1))
-    else:
-        committed = F.lit(-1)
-    return (
-        F.when(F.col("ingest") == "compact", F.lit(False))
-        .when(sid == F.lit(""), F.lit(True))  # unparseable: preserve
-        .when(sid == F.lit("f"), bid_i > F.lit(seq_committed))
-        .otherwise(bid_i > committed)
-    )
+    meta = read_sidecar(root, _META)
+    return _fold_keys(_read_seg(spark, root, meta), meta)
 
 
 def rebuild_additive_store(
@@ -289,121 +229,78 @@ def rebuild_additive_store(
     stream_id: str = "s",
     keep_epochs: int = 2,
 ) -> dict:
-    """EPOCH-REBUILD RETRACTION for non-invertible monoids (round 11,
-    VERDICT r10 missing #1): MAX has no inverse — an HLL register cannot
-    un-observe a value, a high-water mark cannot recede — so deletes
-    reach a MAX store by REBUILD, not cancellation. The caller recomputes
-    the partial aggregate over the SURVIVING rows (corpus minus the
-    forget cohort — exactly what it would have folded had the cohort
-    never arrived) and this publishes it as the new epoch's ENTIRE
-    committed state with one atomic meta flip; uncommitted crash residue
-    is preserved verbatim (same discipline as compaction, so an
-    in-flight retry still heals). Register-exact by construction: the
-    post-rebuild state is bit-identical to a store that never saw the
-    forgotten rows — the residue proof gdpr-style audits need.
+    """EPOCH-REBUILD RETRACTION for non-invertible monoids: MAX has no
+    inverse — an HLL register cannot un-observe a value, a high-water
+    mark cannot recede — so deletes reach a MAX store by REBUILD, not
+    cancellation. The caller recomputes the partial aggregate over the
+    SURVIVING rows (corpus minus the forget cohort — exactly what it
+    would have folded had the cohort never arrived) and this publishes
+    it as the new epoch's ENTIRE committed state, ledgered like a fold;
+    uncommitted crash residue is preserved verbatim, so an in-flight
+    retry still heals. Register-exact by construction: the post-rebuild
+    state is bit-identical to a store that never saw the forgotten rows.
 
     This runs on TAKEDOWN cadence (GDPR/DMCA), never per batch: one
     aggregation over surviving rows is what exact forgetting of a
-    non-invertible sketch costs by information-theoretic necessity
-    (reference analog: Delete is first-class, src/main.rs:46-53; SUM
-    stores keep the cheaper request-bounded retract_segment). Works for
-    any monoid, ledger-gated like every fold (a replayed rebuild batch is
-    skipped)."""
-    meta = _read_meta(root)
-    ledger = meta.get("last_batch_by_stream") or {}
-    if batch_id is not None and int(batch_id) <= int(
-        ledger.get(stream_id, -1)
-    ):
+    non-invertible sketch costs (SUM stores keep the cheaper
+    request-bounded retract_segment). Works for any monoid."""
+    meta = read_sidecar(root, _META)
+    if ledger_done(meta, stream_id, batch_id):
         return {"n_keys": 0, "skipped_duplicate": True}
-    epoch = int(meta["epoch"])
-    new_epoch = epoch + 1
-    op = _merge_fn(meta)
-    base = (
-        surviving_partial.select(
-            *meta["key_cols"],
-            *[F.col(c).cast("bigint").alias(c) for c in meta["sum_cols"]],
-        )
-        .groupBy(*meta["key_cols"])
-        .agg(*[op(c).cast("bigint").alias(c) for c in meta["sum_cols"]])
-        .withColumn("ingest", F.lit("compact"))
-        .coalesce(1)
+    state = surviving_partial.select(
+        *meta["key_cols"],
+        *[F.col(c).cast("bigint").alias(c) for c in meta["sum_cols"]],
     )
-    passthru = (
-        _read_seg(spark, root, epoch)
-        .filter(_uncommitted_mask(meta))
-        .select(*meta["key_cols"], *meta["sum_cols"], "ingest")
+    n = _rewrite_epoch(
+        spark, root, meta, keep_epochs, state,
+        key=stream_id, batch_id=batch_id, bump=("n_folds",),
     )
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    (
-        base.observe(obs, F.count(F.lit(1)).alias("n"))
-        .unionByName(passthru)
-        .write.mode("overwrite")  # clears a crashed prior attempt
-        .partitionBy("ingest")
-        .parquet(_seg_path(root, new_epoch))
-    )
-    got = obs.get["n"]
-    n = int(got) if got is not None else 0
-    meta = _read_meta(root)
-    meta["epoch"] = new_epoch  # THE publish point (atomic replace)
-    if batch_id is not None:
-        led = dict(meta.get("last_batch_by_stream") or {})
-        led[stream_id] = max(int(led.get(stream_id, -1)), int(batch_id))
-        meta["last_batch_by_stream"] = led
-    meta["n_folds"] = int(meta["n_folds"]) + 1
-    _write_meta(root, meta)
-    for name in sorted(os.listdir(root)):
-        if name.startswith("seg-"):
-            e = int(name.split("-")[1])
-            if e < new_epoch - keep_epochs:
-                shutil.rmtree(os.path.join(root, name))
     return {"n_keys": n, "skipped_duplicate": False}
 
 
 def compact_additive_store(
     spark: SparkSession, root: str, keep_epochs: int = 2
 ) -> int:
-    """Rewrite the COMMITTED segments' sum into ONE 'compact' segment in
-    a NEW epoch and flip the meta atomically. Returns the compacted
-    distinct-key count.
-
-    Tag policy through the rewrite (the streaming/ivf.py round-7/8
-    lesson, inherited at birth here): segments whose ingest tag is ABOVE
-    their stream's committed ledger line — a crashed fold's residue,
-    which a retry will purge — are PRESERVED as their own partitions in
-    the new epoch, never summed into 'compact'. Folding them in would
-    launder the residue into permanent state, and the retry's re-append
-    would then double-count. Committed tags (at or below the line, plus
-    'f-{n}' batch-less tags at or below the seq watermark, plus prior
-    'compact' bases) collapse. WRITER-EXCLUSIVE like every store here:
-    safe under concurrent READS (that is the epoch scheme's point), not
-    under a concurrent fold — run it from the ingest loop
+    """Rewrite the COMMITTED segments' merge into ONE 'compact' segment
+    in a NEW epoch. Returns the compacted distinct-key count. Segments
+    above their ledger line (a crashed fold's residue) stay their own
+    partitions (store.uncommitted_tags); committed tags, batch-less
+    'f-{n}' tags at or below the seq watermark and prior 'compact' bases
+    collapse. WRITER-EXCLUSIVE: run it from the ingest loop
     (classifier_foreach_batch does) or with ingest paused."""
-    meta = _read_meta(root)
-    epoch = int(meta["epoch"])
-    new_epoch = epoch + 1
-    df = _read_seg(spark, root, epoch)
-    uncommitted = _uncommitted_mask(meta)
-    meta_cols = _read_meta(root)
-    op = _merge_fn(meta_cols)
+    meta = read_sidecar(root, _META)
+    return _rewrite_epoch(spark, root, meta, keep_epochs)
+
+
+def _rewrite_epoch(
+    spark: SparkSession,
+    root: str,
+    meta: dict,
+    keep_epochs: int,
+    state: DataFrame | None = None,
+    **publish_kw,
+) -> int:
+    """Write `state` (default: the live epoch's committed segments)
+    merged per key as the 'compact' segment of a NEW epoch, beside the
+    live epoch's uncommitted partitions verbatim; publish the epoch
+    (with `publish_kw`'s ledger commit) and expire old ones. Returns the
+    compacted distinct-key count. Batch-less `f-{n}` tags are committed
+    up to the `seq` watermark."""
+    new_epoch = int(meta["epoch"]) + 1
+    segs = _read_seg(spark, root, meta)
+    uncommitted = uncommitted_tags(
+        meta, "f", int(meta.get("seq", 0)), base_tags=("compact",)
+    )
+    if state is None:
+        state = segs.filter(~uncommitted)
     base = (
-        df.filter(~uncommitted)
-        .groupBy(*meta_cols["key_cols"])
-        .agg(
-            *[
-                op(c).cast("bigint").alias(c)
-                for c in meta_cols["sum_cols"]
-            ]
-        )
+        _fold_keys(state, meta)
         .withColumn("ingest", F.lit("compact"))
         .coalesce(1)
     )
-    passthru = df.filter(uncommitted).select(
-        *meta_cols["key_cols"], *meta_cols["sum_cols"], "ingest"
+    passthru = segs.filter(uncommitted).select(
+        *meta["key_cols"], *meta["sum_cols"], "ingest"
     )
-    from pyspark.sql import Observation
-
     obs = Observation()  # counts the compacted base only (observe wraps it)
     (
         base.observe(obs, F.count(F.lit(1)).alias("n"))
@@ -413,13 +310,6 @@ def compact_additive_store(
         .parquet(_seg_path(root, new_epoch))
     )
     got = obs.get["n"]
-    n = int(got) if got is not None else 0
-    meta = _read_meta(root)  # ledger lines may have moved during the job
-    meta["epoch"] = new_epoch  # THE publish point (atomic replace)
-    _write_meta(root, meta)
-    for name in sorted(os.listdir(root)):
-        if name.startswith("seg-"):
-            e = int(name.split("-")[1])
-            if e < new_epoch - keep_epochs:
-                shutil.rmtree(os.path.join(root, name))
-    return n
+    publish(root, _META, epoch=new_epoch, **publish_kw)
+    expire_epochs(root, _SEG_EPOCH, new_epoch - keep_epochs)
+    return int(got) if got is not None else 0

@@ -41,13 +41,14 @@ from cdc_rs_spark.operators.classify import (
     nb_weights_from_counts,
 )
 from cdc_rs_spark.streaming.additive import (
-    _read_meta,  # noqa: F401 — re-exported for tests/tools
+    _META,
     compact_additive_store,
     fold_segment,
     init_additive_store,
     read_merged,
     retract_segment,
 )
+from cdc_rs_spark.streaming.store import read_sidecar
 
 
 def init_count_store(spark: SparkSession, root: str) -> dict:
@@ -165,7 +166,7 @@ def classifier_foreach_batch(
         if (
             not stats["skipped_duplicate"]
             and compact_every is not None
-            and int(_read_meta(root)["n_folds"]) % compact_every == 0
+            and int(read_sidecar(root, _META)["n_folds"]) % compact_every == 0
         ):
             compact_count_store(batch_df.sparkSession, root)
 

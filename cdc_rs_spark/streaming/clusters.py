@@ -2,10 +2,10 @@
 operators/graph.py's connected components (VERDICT r7 next #1): documents
 arrive as a stream, each micro-batch's verified LSH pairs are folded into
 a persisted (doc_id -> cluster) map with a union-find-style merge, and the
-map is epoch-published (streaming/ivf.py's scheme) so probes never see a
-half-written state. A real ingesting pipeline previously had to re-run
-full batch CC over the whole corpus to refresh cluster membership; this
-folds each batch at batch cost.
+map is published through streaming/store.py (ledger, epochs, retention,
+tombstones, versioned band-store siblings). A real ingesting pipeline
+previously had to re-run full batch CC over the whole corpus to refresh
+cluster membership; this folds each batch at batch cost.
 
 Store layout (root directory + one JSON sidecar):
 
@@ -56,10 +56,9 @@ the equivalence the registered query dedup_incremental_clusters
 oracle-checks and tests/test_streaming_clusters.py pins per
 interleaving.
 
-Folding is IDEMPOTENT by algebra (re-folding already-merged pairs yields
-an empty translation set and identical labels) and the sidecar ledger
-skips replayed batch ids outright, so at-least-once delivery never
-corrupts the map.
+Folding is IDEMPOTENT by algebra as well as by the ledger: re-folding
+already-merged pairs yields an empty translation set and identical
+labels.
 
 Per-batch cost bound (SCALE.md §18): the pair probe is |batch| x bands
 rows against the bucketed band store; the root lookup reads only the
@@ -76,37 +75,33 @@ streaming/dedup.py (pair detection) and streaming/spans.py (span store).
 
 from __future__ import annotations
 
-import json
 import os
-import re
-import shutil
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_rs_spark.operators.graph import connected_components
 from cdc_rs_spark.parallel import run_parallel
+from cdc_rs_spark.streaming.store import (
+    append_tombstones,
+    carry_forward,
+    compact_tombstones,
+    drop_tombstoned,
+    expire_epochs,
+    flip_store,
+    ledger_done,
+    next_sibling,
+    publish,
+    read_sidecar,
+    read_tombstones,
+    readmit_tombstones,
+    resolve_store,
+    write_sidecar,
+)
 
 _META = "_cluster_meta.json"
 N_BUCKETS = 64  # base-map partition buckets (pruned by the fold's lookup)
-
-
-def _meta_path(root: str) -> str:
-    return os.path.join(root, _META)
-
-
-def _read_meta(root: str) -> dict:
-    with open(_meta_path(root)) as f:
-        return json.load(f)
-
-
-def _write_meta(root: str, meta: dict) -> None:
-    tmp = _meta_path(root) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, _meta_path(root))
-
 
 def _base_path(root: str, epoch: int) -> str:
     return os.path.join(root, f"base-{epoch:06d}")
@@ -188,7 +183,7 @@ def init_cluster_store(
     }
     if threshold is not None:
         meta["threshold"] = float(threshold)
-    _write_meta(root, meta)
+    write_sidecar(root, _META, meta)
     return meta
 
 
@@ -197,11 +192,9 @@ def _check_threshold(root: str, threshold: float) -> None:
     callers must match (ADVICE r10 — remove_docs taking a free-parameter
     threshold could silently recompute affected clusters under a
     different bar)."""
-    meta = _read_meta(root)
-    got = meta.get("threshold")
+    got = read_sidecar(root, _META).get("threshold")
     if got is None:
-        meta["threshold"] = float(threshold)
-        _write_meta(root, meta)
+        publish(root, _META, threshold=float(threshold))
     elif float(got) != float(threshold):
         raise ValueError(
             f"cluster store at {root} was built at threshold={got}; "
@@ -337,14 +330,38 @@ def _raw_rows(
     )
 
 
+def _live_roots(
+    spark: SparkSession,
+    root: str,
+    meta: dict,
+    buckets: list[int],
+    ids: list[int],
+    closure: dict[int, int],
+) -> dict[int, int]:
+    """_raw_rows + the closure driver-side, for at most _IDS_PUSHDOWN_CAP
+    ids: the raw rows collect in one exchange-free stage, then per-doc
+    latest fold wins, dead evicts and stale roots chase the closure in
+    Python. Docs with no live entry are absent."""
+    best: dict[int, tuple] = {}
+    for r in _raw_union(spark, root, meta, buckets, ids=ids).collect():
+        prev = best.get(r["doc_id"])
+        if prev is None or r["_seq"] > prev[0]:
+            best[int(r["doc_id"])] = (
+                int(r["_seq"]), int(r["cluster"]), bool(r["dead"]),
+            )
+    return {
+        doc: closure.get(c, c)
+        for doc, (_s, c, dead) in best.items()
+        if not dead
+    }
+
+
 def live_cluster_map(spark: SparkSession, root: str) -> DataFrame:
     """The resolved (doc_id -> cluster) map: base + deltas latest-wins,
     stale roots rewritten through the translation closure. Docs never
     seen in a pair have no entry (matching the batch CC query's output
-    shape — singletons are implicit). Snapshot-consistent: one atomic
-    sidecar read names every directory; superseded epochs are retained
-    through `keep_epochs` further compactions."""
-    meta = _read_meta(root)
+    shape — singletons are implicit)."""
+    meta = read_sidecar(root, _META)
     return _apply_closure(
         _raw_rows(spark, root, meta, None),
         _closure(meta.get("translations") or []),
@@ -354,93 +371,20 @@ def live_cluster_map(spark: SparkSession, root: str) -> DataFrame:
 DRIVER_CC_CAP = 2_000_000  # pairs per fold handled by driver union-find
 
 
-def _tomb_path(root: str) -> str:
-    """Resolve the live tombstone directory: the sidecar's `tomb_dir` key
-    names it (set by purge_band_stores' compaction / readmit_docs'
-    rewrite — both publish a NEW directory with one atomic meta replace);
-    'tomb' is the pre-compaction default."""
-    try:
-        name = _read_meta(root).get("tomb_dir") or "tomb"
-    except FileNotFoundError:
-        name = "tomb"
-    return os.path.join(root, name)
-
-
 def tombstones(spark: SparkSession, root: str) -> DataFrame:
-    """The cumulative removed-doc set (round 10, VERDICT r9 next #1) —
-    one skinny (doc_id) parquet dir, appended by remove_docs. It is the
-    store's RESURRECTION GUARD: the band/shingle stores still carry a
-    removed doc's rows until purge_band_stores rewrites them, so every
-    pair fold anti-joins candidates against this set — a future batch
-    can match a removed doc's bands but can never re-enter it into the
-    map. Bounded by total deletes, not corpus size, and DEDUPED at purge
-    time (purge_band_stores compacts it to distinct ids). The set is NOT
-    truncated after physical purge (ADVICE r10 suggested it): the stores
-    stop carrying removed rows, but an at-least-once UPSTREAM can re-send
-    a forgotten doc's insert any time later, and only this set blocks
-    that re-ingestion — the explicit un-forget path is readmit_docs."""
-    p = _tomb_path(root)
-    if not os.path.isdir(p):
-        return spark.createDataFrame([], "doc_id bigint")
-    return spark.read.schema("doc_id bigint").parquet(p)
+    """The removed-doc set, appended by remove_docs. It is the store's
+    RESURRECTION GUARD: the band/shingle stores still carry a removed
+    doc's rows until purge_band_stores rewrites them, so every pair fold
+    anti-joins candidates against this set — a future batch can match a
+    removed doc's bands but can never re-enter it into the map. The
+    explicit un-forget path is readmit_docs."""
+    return read_tombstones(spark, root, _META, "doc_id")
 
 
-def _filter_tombstoned(pairs: DataFrame, root: str) -> DataFrame:
-    """Drop pairs touching a removed doc. No-op (no scan) before the
-    first removal; the tombstone side is BROADCAST (delete-bounded and
-    purge-compacted — the IVF twin _drop_tombstoned's discipline,
-    ADVICE r10)."""
-    if not os.path.isdir(_tomb_path(root)):
-        return pairs
-    tomb = F.broadcast(tombstones(pairs.sparkSession, root))
-    return (
-        pairs.join(
-            tomb.withColumnRenamed("doc_id", "id_a"), "id_a", "left_anti"
-        ).join(
-            tomb.withColumnRenamed("doc_id", "id_b"), "id_b", "left_anti"
-        )
-    )
-
-
-# ---- band/shingle/group store resolution (round 11) ------------------------
-#
-# The sig/shingle/group stores are bare append directories; purge_band_stores
-# rewrites them minus the tombstoned docs. The round-10 swap (rmtree + rename)
-# had a crash window that LOST the store — and remove_docs silently treated a
-# missing store as "no pairs", relabeling surviving members to singletons
-# (ADVICE r10, medium). Now the rewrite goes to a VERSIONED SIBLING
-# (`{path}.v{N}`) and a one-line pointer file (`{path}.current`) flips
-# atomically (os.replace); every reader and appender resolves through the
-# pointer. A store that has never been purged stays the bare directory
-# (pointer absent), so pre-round-11 layouts read unchanged.
-
-
-def _resolve_store(path: str) -> str:
-    ptr = path + ".current"
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            return path + "." + f.read().strip()
-    return path
-
-
-def _flip_store(path: str, version: int) -> None:
-    """Atomically point `path` at its `.v{version}` sibling, then GC every
-    superseded sibling (and the bare dir). Crash before the replace leaves
-    an orphan sibling the next purge overwrites; crash after it leaves
-    stale directories the next flip GCs — never a missing store."""
-    ptr = path + ".current"
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(f"v{version:06d}")
-    os.replace(tmp, ptr)
-    keep = os.path.basename(path) + f".v{version:06d}"
-    parent = os.path.dirname(path) or "."
-    base = os.path.basename(path)
-    for name in os.listdir(parent):
-        if name == base or (
-            re.fullmatch(re.escape(base) + r"\.v\d+", name) and name != keep
-        ):
-            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+# The sig/shingle/group stores are bare append directories that
+# purge_band_stores and the size tiering rewrite into versioned siblings
+# (store.resolve_store / store.flip_store); every reader and appender
+# resolves through the pointer.
 
 
 def _group_path(sig_store_path: str, group_store_path: str | None) -> str:
@@ -488,6 +432,32 @@ def _union_find(edges) -> dict[int, int]:
     return {x: find(x) for x in parent}
 
 
+def _publish_delta(
+    root: str,
+    delta_name: str,
+    n_rows: int,
+    stream_id: str,
+    batch_id: int | None,
+    translations: Callable[[list], list],
+) -> None:
+    """The fold's one sidecar write: list the written delta, count its
+    rows toward the auto-compaction trigger (LSM-style size accounting
+    against the base size), replace the translation log with
+    `translations(log)`, commit the ledger line and count the fold."""
+
+    def edit(m: dict) -> None:
+        if delta_name not in m["deltas"]:
+            m["deltas"] = [*m["deltas"], delta_name]
+            m["rows_since_compact"] = int(
+                m.get("rows_since_compact", 0)
+            ) + int(n_rows)
+        m["translations"] = translations(list(m.get("translations") or []))
+
+    publish(
+        root, _META, edit, key=stream_id, batch_id=batch_id, bump=("n_folds",)
+    )
+
+
 def fold_pairs(
     spark: SparkSession,
     root: str,
@@ -516,11 +486,8 @@ def fold_pairs(
          atomic replace. A crash between 5a and 5b leaves an orphan
          delta dir that the retried fold overwrites (deterministic
          name) — never a half-applied merge."""
-    meta = _read_meta(root)
-    ledger = meta.get("last_batch_by_stream") or {}
-    if batch_id is not None and int(batch_id) <= int(
-        ledger.get(stream_id, -1)
-    ):
+    meta = read_sidecar(root, _META)
+    if ledger_done(meta, stream_id, batch_id):
         return {
             "n_pairs": 0,
             "n_new_entries": 0,
@@ -543,7 +510,8 @@ def fold_pairs(
         .distinct()
     )
     # resurrection guard: a pair touching a removed doc never folds
-    pairs = _filter_tombstoned(pairs, root)
+    for side in ("id_a", "id_b"):
+        pairs = drop_tombstoned(pairs, root, _META, "doc_id", on=side)
     # ONE action materializes the batch-bounded pair set driver-side for
     # the union-find (a micro-batch's verified pairs are the definition
     # of count-bounded); a pathological giant batch falls back to the
@@ -561,10 +529,7 @@ def fold_pairs(
         if batch_id is not None:
             if before_publish is not None:
                 before_publish()
-            led = dict(ledger)
-            led[stream_id] = max(int(led.get(stream_id, -1)), int(batch_id))
-            meta["last_batch_by_stream"] = led
-            _write_meta(root, meta)
+            publish(root, _META, key=stream_id, batch_id=batch_id)
         return {
             "n_pairs": 0,
             "n_new_entries": 0,
@@ -609,21 +574,7 @@ def fold_pairs(
         # roots chase the closure, untracked docs root to themselves);
         # the per-fold plan loses one exchange, two broadcast builds and
         # a createDataFrame round-trip.
-        raw_rows = _raw_union(
-            spark, root, meta, buckets, ids=touched_ids
-        ).collect()
-        best: dict[int, tuple] = {}
-        for r in raw_rows:
-            prev = best.get(r["doc_id"])
-            if prev is None or r["_seq"] > prev[0]:
-                best[int(r["doc_id"])] = (
-                    int(r["_seq"]), int(r["cluster"]), bool(r["dead"]),
-                )
-        cur_map = {
-            doc: closure.get(c, c)
-            for doc, (_s, c, dead) in best.items()
-            if not dead
-        }
+        cur_map = _live_roots(spark, root, meta, buckets, touched_ids, closure)
         lab = _union_find(
             [(int(r["id_a"]), int(r["id_b"])) for r in pair_rows]
             + [(i, cur_map.get(i, i)) for i in touched_ids]
@@ -690,8 +641,6 @@ def fold_pairs(
         delta = labels.select(
             F.col("v").alias("doc_id"), F.col("component").alias("cluster")
         )
-    from pyspark.sql import Observation
-
     obs = Observation()
     (
         delta.withColumn("dead", F.lit(False))
@@ -708,23 +657,10 @@ def fold_pairs(
     # exactly as the sequential ordering failed.
     if before_publish is not None:
         before_publish()
-    meta = _read_meta(root)  # re-read at publish (ledger lines may move)
-    if delta_name not in meta["deltas"]:
-        meta["deltas"] = list(meta["deltas"]) + [delta_name]
-        # LSM-style size accounting (round 12): the auto-compaction
-        # trigger compares rows-appended-since-compact to the base size
-        meta["rows_since_compact"] = (
-            int(meta.get("rows_since_compact", 0)) + int(n_delta)
-        )
-    meta["translations"] = list(meta.get("translations") or []) + [
-        [a, b] for a, b in new_translations
-    ]
-    if batch_id is not None:
-        led = dict(meta.get("last_batch_by_stream") or {})
-        led[stream_id] = max(int(led.get(stream_id, -1)), int(batch_id))
-        meta["last_batch_by_stream"] = led
-    meta["n_folds"] = int(meta["n_folds"]) + 1
-    _write_meta(root, meta)
+    _publish_delta(
+        root, delta_name, n_delta, stream_id, batch_id,
+        lambda log: log + [[a, b] for a, b in new_translations],
+    )
     return {
         "n_pairs": int(n_pairs),
         "n_new_entries": int(n_delta),
@@ -808,8 +744,7 @@ def remove_docs(
     The band/shingle stores still hold the removed docs' rows until
     purge_band_stores; the tombstone set blocks resurrection in every
     later fold (fold_pairs filters candidate pairs against it)."""
-    meta = _read_meta(root)
-    ledger = meta.get("last_batch_by_stream") or {}
+    meta = read_sidecar(root, _META)
     noop = {
         "n_removed": 0,
         "n_affected_clusters": 0,
@@ -817,9 +752,7 @@ def remove_docs(
         "n_dropped_singletons": 0,
         "skipped_duplicate": True,
     }
-    if batch_id is not None and int(batch_id) <= int(
-        ledger.get(stream_id, -1)
-    ):
+    if ledger_done(meta, stream_id, batch_id):
         return noop
     _check_threshold(root, threshold)
     epoch = int(meta["base_epoch"])
@@ -847,7 +780,7 @@ def remove_docs(
     )
     n_removed = len(removed_ids)
     # 1. tombstones append-first (idempotent: duplicates are harmless)
-    removed.write.mode("append").parquet(_tomb_path(root))
+    append_tombstones(removed, root, _META)
     # 2. the removed docs' current roots (bucket-pruned + closure)
     buckets = sorted({_py_bucket(i) for i in removed_ids})
     closure = _closure(meta.get("translations") or [])
@@ -857,21 +790,12 @@ def remove_docs(
         # stage; latest-wins + dead-eviction + closure run in Python —
         # the distributed form paid a groupBy exchange plus two
         # broadcast joins per delete fold for <= |request| keys.
-        best: dict[int, tuple] = {}
-        for r in _raw_union(
-            spark, root, meta, buckets, ids=removed_ids
-        ).collect():
-            prev = best.get(r["doc_id"])
-            if prev is None or r["_seq"] > prev[0]:
-                best[int(r["doc_id"])] = (
-                    int(r["_seq"]), int(r["cluster"]), bool(r["dead"]),
-                )
         affected = sorted(
-            {
-                closure.get(c, c)
-                for _doc, (_s, c, dead) in best.items()
-                if not dead
-            }
+            set(
+                _live_roots(
+                    spark, root, meta, buckets, removed_ids, closure
+                ).values()
+            )
         )
     else:
         resolved_removed = removed.join(
@@ -887,14 +811,9 @@ def remove_docs(
             for r in resolved_removed.select("cluster").distinct().collect()
         )
 
-    def publish(delta: DataFrame, translations) -> tuple[int, int]:
-        """Write the delta once; the row count AND the live/dead split
-        ride the same action as Observation metrics (round 12 — the old
-        form ran `relabeled.count()` + `dropped.count()` as two extra
-        actions, executing the delta subtree three times per delete
-        fold). Returns (n_rows, n_alive)."""
-        from pyspark.sql import Observation
-
+    def write_delta(delta: DataFrame, translations) -> tuple[int, int]:
+        """Write the delta once, the row count AND the live/dead split
+        riding that one action; returns (n_rows, n_alive)."""
         obs = Observation()
         (
             delta.observe(
@@ -907,21 +826,10 @@ def remove_docs(
             .write.mode("overwrite")  # crashed-retry overwrites
             .parquet(os.path.join(root, delta_name))
         )
-        m = _read_meta(root)
-        if delta_name not in m["deltas"]:
-            m["deltas"] = list(m["deltas"]) + [delta_name]
-            m["rows_since_compact"] = (
-                int(m.get("rows_since_compact", 0)) + int(obs.get["n"])
-            )
-        m["translations"] = translations
-        if batch_id is not None:
-            led = dict(m.get("last_batch_by_stream") or {})
-            led[stream_id] = max(
-                int(led.get(stream_id, -1)), int(batch_id)
-            )
-            m["last_batch_by_stream"] = led
-        m["n_folds"] = int(m["n_folds"]) + 1
-        _write_meta(root, m)
+        _publish_delta(
+            root, delta_name, obs.get["n"], stream_id, batch_id,
+            lambda _log: translations,
+        )
         return int(obs.get["n"]), int(obs.get["n_alive"] or 0)
 
     dead_removed = removed.select(
@@ -930,7 +838,7 @@ def remove_docs(
     )
     if not affected:
         # no removed doc had an entry: tombstones + dead rows only
-        publish(dead_removed, list(meta.get("translations") or []))
+        write_delta(dead_removed, list(meta.get("translations") or []))
         return {
             **noop,
             "n_removed": int(n_removed),
@@ -968,8 +876,8 @@ def remove_docs(
         return jaccard_verify(cand, sh, threshold).select("id_a", "id_b")
 
     if sig_store_path is not None:
-        sig_cur = _resolve_store(sig_store_path)
-        sh_cur = _resolve_store(shingle_store_path)
+        sig_cur = resolve_store(sig_store_path)
+        sh_cur = resolve_store(shingle_store_path)
         if not os.path.isdir(sig_cur) or not os.path.isdir(sh_cur):
             raise RuntimeError(
                 f"cluster store {root} has {len(affected)} affected "
@@ -981,7 +889,7 @@ def remove_docs(
             )
         sig_all = spark.read.schema(_SIG_SCHEMA).parquet(sig_cur)
         sh_all = spark.read.schema(_SH_SCHEMA).parquet(sh_cur)
-        gcur = _resolve_store(_group_path(sig_store_path, group_store_path))
+        gcur = resolve_store(_group_path(sig_store_path, group_store_path))
         if os.path.isdir(gcur):
             gs = spark.read.schema(_GROUP_SCHEMA).parquet(gcur)
             # join BEFORE distinct (round 13b): the old distinct().join()
@@ -1165,7 +1073,7 @@ def remove_docs(
     # one action: the write's Observation carries the live/dead split, so
     # n_relabeled (= live rows) and n_dropped (= dead rows minus the
     # removed docs' own dead rows) no longer re-execute the delta subtree
-    n_rows, n_alive = publish(delta, kept_translations)
+    n_rows, n_alive = write_delta(delta, kept_translations)
     return {
         "n_removed": int(n_removed),
         "n_affected_clusters": len(affected),
@@ -1185,23 +1093,12 @@ def purge_band_stores(
     """Physically erase tombstoned docs' rows from the band, shingle and
     exact-group stores (the GDPR completion step — until this runs, a
     removed doc's minhash bands persist on disk even though the tombstone
-    set blocks them from ever re-entering the map). Round 11 (ADVICE r10,
-    medium): the swap is ATOMIC — each store is rewritten minus the
-    tombstoned docs into a versioned sibling (`{path}.v{N}`) and a
-    one-line pointer file flips with os.replace; readers/appenders
-    resolve through _resolve_store, so no crash window can lose a store
-    (the old rmtree+rename window let remove_docs silently relabel
-    survivors to singletons). Superseded directories are GC'd on the next
-    flip. WRITER-EXCLUSIVE like compaction (run between folds).
-
-    The tombstone set itself is COMPACTED here (distinct ids, one dense
-    file, published via the sidecar's tomb_dir with an atomic meta
-    replace) but NOT truncated: the stores stop carrying removed rows,
-    yet only this set blocks an at-least-once upstream from re-ingesting
-    a forgotten doc later — un-forgetting is readmit_docs' explicit,
-    ledgered job. Returns surviving row counts."""
-    from pyspark.sql import Observation
-
+    set blocks them from ever re-entering the map). Each store is
+    rewritten into its next versioned sibling and the pointer flips, so
+    no crash window can lose a store (remove_docs would otherwise
+    silently relabel survivors to singletons). The tombstone set is
+    compacted to distinct ids, not truncated. WRITER-EXCLUSIVE like
+    compaction (run between folds). Returns surviving row counts."""
     tomb = tombstones(spark, root)
     stores = [
         (sig_store_path, "sig_rows"),
@@ -1214,47 +1111,25 @@ def purge_band_stores(
         Observation (round 12 — the old form re-read the written parquet
         for a second action per store), and the three stores' rewrites
         are independent directories run concurrently (§2.6)."""
-        cur = _resolve_store(path)
+        cur, nxt, sib = next_sibling(path)
         if not os.path.exists(cur):
             return 0
-        m = re.fullmatch(re.escape(path) + r"\.v(\d+)", cur)
-        nxt = (int(m.group(1)) + 1) if m else 1
         kept = spark.read.parquet(cur).join(tomb, "doc_id", "left_anti")
-        sib = f"{path}.v{nxt:06d}"
         obs = Observation()
         kept.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
             "overwrite"
         ).parquet(sib)
-        _flip_store(path, nxt)
+        flip_store(path, nxt)
         return int(obs.get["n"])
-
-    def compact_tomb() -> None:
-        # compact the tombstone set: distinct ids, new dir, atomic meta
-        # flip. Runs AFTER the rewrites (not overlapped): its final
-        # rmtree of the superseded tomb dir must not race the rewrite
-        # legs' anti-joins, which read that dir.
-        old_tomb = _tomb_path(root)
-        if not os.path.isdir(old_tomb):
-            return
-        meta = _read_meta(root)
-        n = int(meta.get("tomb_seq", 0)) + 1
-        new_name = f"tomb-{n:06d}"
-        tomb.distinct().coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(root, new_name)
-        )
-        meta = _read_meta(root)
-        meta["tomb_dir"] = new_name
-        meta["tomb_seq"] = n
-        _write_meta(root, meta)
-        if os.path.basename(old_tomb) != new_name:
-            shutil.rmtree(old_tomb, ignore_errors=True)
 
     counts = run_parallel(
         lambda: rewrite(stores[0][0]),
         lambda: rewrite(stores[1][0]),
         lambda: rewrite(stores[2][0]),
     )
-    compact_tomb()
+    # AFTER the rewrites, not overlapped: the compaction's rmtree of the
+    # superseded tomb dir must not race the rewrite legs' anti-joins
+    compact_tombstones(spark, root, _META, "doc_id")
     return {name: counts[i] for i, (_, name) in enumerate(stores)}
 
 
@@ -1265,121 +1140,49 @@ def readmit_docs(
     batch_id: int | None = None,
     stream_id: str = "s",
 ) -> dict:
-    """TOMBSTONE-CLEAR / re-admit fold (round 11, VERDICT r10 next #3 —
-    the DMCA-counter-notice path): remove ids from the tombstone set so
-    FUTURE folds may re-ingest them. Deliberately does NOT resurrect old
-    rows — the purge already erased them (or will); re-ingestion is the
-    only way back, so a re-admitted doc re-enters with exactly the
-    ingest-time semantics of a never-seen doc. Ledgered like every fold
-    (a replayed clear is a no-op) and published atomically: the surviving
-    tombstone set is written to a NEW directory and the sidecar's
-    tomb_dir flips in one meta replace. Re-admitting an id that was
-    never tombstoned is a harmless no-op (set semantics).
-
-    Ledger convention (ADVICE r11, low — unified across the cluster/IVF/
-    span readmit folds): the clear ledgers under its OWN
-    '{stream_id}!ra' line, never the main fold line — a readmit batch id
-    must not advance the ingest stream's replay gate (sharing the line
-    let a readmit at batch N silently skip ingest batches <= N on the
-    same stream). n_readmitted reports tombstones ACTUALLY CLEARED
-    (before/after delta), not requested ids — and both counts ride the
-    rewrite's single write action (Observation), replacing the old
-    three-action fold."""
-    from pyspark.sql import Observation
-
-    meta = _read_meta(root)
-    ledger = meta.get("last_batch_by_stream") or {}
-    key = f"{stream_id}!ra"
-    if batch_id is not None and int(batch_id) <= int(ledger.get(key, -1)):
-        return {"n_readmitted": 0, "n_tombstones_left": None,
-                "skipped_duplicate": True}
-    ids = readmitted.select(
-        F.col("doc_id").cast("bigint").alias("doc_id")
-    ).distinct()
-    marked = tombstones(spark, root).distinct().join(
-        F.broadcast(ids.withColumn("__r", F.lit(True))), "doc_id", "left"
+    """TOMBSTONE-CLEAR / re-admit fold (the DMCA-counter-notice path):
+    remove ids from the tombstone set so FUTURE folds may re-ingest
+    them, ledgered under '{stream_id}!ra'. Deliberately does NOT
+    resurrect old rows — the purge already erased them (or will);
+    re-ingestion is the only way back, so a re-admitted doc re-enters
+    with exactly the ingest-time semantics of a never-seen doc."""
+    return readmit_tombstones(
+        spark, root, _META, "doc_id", readmitted,
+        key=f"{stream_id}!ra", batch_id=batch_id, bump=("n_folds",),
     )
-    n = int(meta.get("tomb_seq", 0)) + 1
-    new_name = f"tomb-{n:06d}"
-    obs = Observation()
-    (
-        marked.observe(
-            obs,
-            F.count(F.lit(1)).alias("nb"),
-            F.count("__r").alias("nc"),
-        )
-        .filter(F.col("__r").isNull())
-        .select("doc_id")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(root, new_name))
-    )
-    n_cleared = int(obs.get["nc"])
-    n_left = int(obs.get["nb"]) - n_cleared
-    old_tomb = _tomb_path(root)
-    meta = _read_meta(root)
-    meta["tomb_dir"] = new_name
-    meta["tomb_seq"] = n
-    if batch_id is not None:
-        led = dict(meta.get("last_batch_by_stream") or {})
-        led[key] = max(int(led.get(key, -1)), int(batch_id))
-        meta["last_batch_by_stream"] = led
-    meta["n_folds"] = int(meta["n_folds"]) + 1
-    _write_meta(root, meta)
-    if os.path.isdir(old_tomb) and os.path.basename(old_tomb) != new_name:
-        shutil.rmtree(old_tomb, ignore_errors=True)
-    return {
-        "n_readmitted": n_cleared,
-        "n_tombstones_left": n_left,
-        "skipped_duplicate": False,
-    }
 
 
 def compact_cluster_store(
     spark: SparkSession, root: str, keep_epochs: int = 2
 ) -> int:
     """The path-compression pass: materialize the fully-resolved map
-    (base + deltas + translation closure) into a NEW base epoch and
-    publish it with one atomic sidecar flip; deltas and translations
-    reset. Superseded epochs and the deltas they consumed are GC'd once
-    `keep_epochs` compactions old (a mid-scan reader has whole
-    compaction cycles to finish — streaming/ivf.py's retention
-    contract). WRITER-EXCLUSIVE vs folds (run it from the ingest loop,
-    clusters_foreach_batch's compact_every does); always safe under
-    concurrent readers. Returns the resolved row count.
-
-    Crash windows: before the flip, an orphan next-epoch directory
-    (overwritten by the retried compact); after it, at worst un-GC'd
-    directories — both heal on the next compact."""
-    meta = _read_meta(root)
+    (base + deltas + translation closure) into a NEW base epoch; deltas
+    and translations reset, and superseded bases expire with the deltas
+    they consumed. WRITER-EXCLUSIVE vs folds (clusters_foreach_batch
+    runs it from the ingest loop). Returns the resolved row count."""
+    meta = read_sidecar(root, _META)
     epoch = int(meta["base_epoch"])
     new_epoch = epoch + 1
     resolved = _apply_closure(
         _raw_rows(spark, root, meta, None),
         _closure(meta.get("translations") or []),
     )
-    from pyspark.sql import Observation
-
     obs = Observation()
     _write_base(
         resolved.observe(obs, F.count(F.lit(1)).alias("n")),
         _base_path(root, new_epoch),
     )
     n = int(obs.get["n"])
-    meta = _read_meta(root)
-    meta["base_epoch"] = new_epoch
-    meta["deltas"] = []
-    meta["translations"] = []
-    meta["rows_since_compact"] = 0
-    meta["base_rows"] = n  # the auto-compaction trigger's denominator
-    _write_meta(root, meta)
-    # deferred GC by epoch prefix: bases AND their deltas — including
-    # orphans a crashed batch-less fold never published — go together
-    # once the epoch is keep_epochs compactions old
-    for name in os.listdir(root):
-        m = re.fullmatch(r"(?:base|delta)-(\d+)(?:-.*)?", name)
-        if m and int(m.group(1)) < new_epoch - keep_epochs:
-            shutil.rmtree(os.path.join(root, name))
+    publish(
+        root, _META, base_epoch=new_epoch, deltas=[], translations=[],
+        rows_since_compact=0,
+        base_rows=n,  # the auto-compaction trigger's denominator
+    )
+    # bases AND their deltas (including orphans a crashed batch-less fold
+    # never published) expire together
+    expire_epochs(
+        root, r"(?:base|delta)-(\d+)(?:-.*)?", new_epoch - keep_epochs
+    )
     return n
 
 
@@ -1415,7 +1218,7 @@ def maybe_compact_cluster_store(
     (`compact_every`) or the size-based auto trigger says it is due.
     Callers must hold writer exclusivity (clusters_foreach_batch calls
     this right after its fold commit). Returns True when it compacted."""
-    meta = _read_meta(root)
+    meta = read_sidecar(root, _META)
     due = (
         compact_every is not None
         and int(meta["n_folds"]) % int(compact_every) == 0
@@ -1456,34 +1259,22 @@ def maybe_compact_cluster_store(
 # min_files * batch_bytes per firing — constant amortized write cost per
 # batch — while each store's live file count stays O(min_files +
 # total_bytes / small_bytes). Row multisets are preserved exactly: readers
-# cannot observe compaction except through listing cost, and a crash
-# anywhere before the pointer flip leaves an orphan sibling the next
-# attempt overwrites (the retried version number re-derives from the
-# still-unflipped pointer). WRITER-EXCLUSIVE like the cluster-map
-# compaction: clusters_foreach_batch runs it after the fold commit.
-#
-# Local defaults match the bench/stream-bench batch shape; production
-# values are env-parameterised (a cluster ingesting GB-sized batches
-# wants a larger small-file bar, e.g. its DFS block size).
+# cannot observe compaction except through listing cost. WRITER-EXCLUSIVE
+# like the cluster-map compaction: clusters_foreach_batch runs it after
+# the fold commit.
 
-BAND_COMPACT_MIN_FILES = int(
-    os.environ.get("SPARK_GRAFT_BAND_COMPACT_FILES", "16")
-)
-BAND_COMPACT_SMALL_BYTES = int(
-    float(os.environ.get("SPARK_GRAFT_BAND_COMPACT_SMALL_MB", "64"))
-    * (1 << 20)
-)
-# merges whose input bytes fit under this bar run DRIVER-SIDE via pyarrow
-# (~ms for KB-MB inputs) instead of scheduling a Spark job: the first cut
-# used a job for every merge and its fixed overhead (~0.3-0.5 s wall per
-# firing on local[32]) ate the read-side win at bench scale. The cap
-# bounds driver memory exactly like the fold's pair collect bounds it —
-# past the cap (possible only at cluster scale) the Spark-job arm takes
-# over, where job overhead is noise against the data volume.
-BAND_COMPACT_DRIVER_BYTES = int(
-    float(os.environ.get("SPARK_GRAFT_BAND_COMPACT_DRIVER_MB", "256"))
-    * (1 << 20)
-)
+BAND_COMPACT_MIN_FILES = 16
+BAND_COMPACT_SMALL_BYTES = 64 << 20
+# merges whose DECODED input bytes (parquet row-group total_byte_size, not
+# the compressed file size the driver would inflate) fit under this bar
+# run DRIVER-SIDE via pyarrow (~ms for KB-MB inputs) instead of
+# scheduling a Spark job: the first cut used a job for every merge and
+# its fixed overhead (~0.3-0.5 s wall per firing on local[32]) ate the
+# read-side win at bench scale. The cap bounds driver memory exactly like
+# the fold's pair collect bounds it — past the cap (possible only at
+# cluster scale) the Spark-job arm takes over, where job overhead is
+# noise against the data volume.
+BAND_COMPACT_DRIVER_BYTES = 256 << 20
 
 
 def _compact_band_store(
@@ -1493,13 +1284,14 @@ def _compact_band_store(
     min_files: int | None = None,
 ) -> bool:
     """Merge a band/shingle/group store's small append files into one
-    consolidated file (hardlinking large files forward) behind an atomic
-    pointer flip. Writer-exclusive; returns True when it compacted."""
+    consolidated file (carrying large files forward by hardlink) behind
+    an atomic pointer flip. Writer-exclusive; returns True when it
+    compacted."""
     if small_bytes is None:
         small_bytes = BAND_COMPACT_SMALL_BYTES
     if min_files is None:
         min_files = BAND_COMPACT_MIN_FILES
-    cur = _resolve_store(path)
+    cur = resolve_store(path)
     if not os.path.isdir(cur):
         return False
     data = [
@@ -1511,17 +1303,16 @@ def _compact_band_store(
     if len(small) < min_files:
         return False
     small_names = {e.name for e in small}
-    m = re.fullmatch(re.escape(path) + r"\.v(\d+)", cur)
-    nxt = (int(m.group(1)) + 1) if m else 1
-    sib = f"{path}.v{nxt:06d}"
-    if os.path.exists(sib):
-        # orphan of a crashed prior attempt (same target version because
-        # the pointer never flipped): stale bytes, rebuild from scratch
-        shutil.rmtree(sib)
-    small_total = sum(e.stat().st_size for e in small)
-    if small_total <= BAND_COMPACT_DRIVER_BYTES:
-        import pyarrow.parquet as pq
+    _, nxt, sib = next_sibling(path)
+    import pyarrow.parquet as pq
 
+    decoded = 0
+    for e in small:
+        md = pq.ParquetFile(e.path).metadata
+        decoded += sum(
+            md.row_group(i).total_byte_size for i in range(md.num_row_groups)
+        )
+    if decoded <= BAND_COMPACT_DRIVER_BYTES:
         os.makedirs(sib)
         tbl = pq.ParquetDataset([e.path for e in small]).read()
         pq.write_table(
@@ -1538,9 +1329,8 @@ def _compact_band_store(
         )
     for e in data:
         if e.name not in small_names:
-            # same parent directory => same filesystem, link never copies
-            os.link(e.path, os.path.join(sib, e.name))
-    _flip_store(path, nxt)
+            carry_forward(e.path, os.path.join(sib, e.name))
+    flip_store(path, nxt)
     return True
 
 
@@ -1615,7 +1405,7 @@ def clusters_foreach_batch(
     After any prefix of batches, live_cluster_map == batch CC over all
     near-dup pairs among every doc ingested so far — the invariant the
     registered query dedup_incremental_clusters oracle-checks. Reads and
-    appends resolve through the purge pointer (_resolve_store)."""
+    appends resolve through the purge pointer (store.resolve_store)."""
     from cdc_rs_spark.operators.dedup import (
         band_explode,
         jaccard_verify,
@@ -1637,10 +1427,9 @@ def clusters_foreach_batch(
         # ledger gate FIRST: a batch at or below its stream's committed
         # line already ran to completion (fold commit is the LAST step),
         # so its bands/shingles/groups are in the stores — skip it all.
-        ledger = (
-            _read_meta(cluster_store_root).get("last_batch_by_stream") or {}
-        )
-        if int(batch_id) <= int(ledger.get(stream_id, -1)):
+        if ledger_done(
+            read_sidecar(cluster_store_root, _META), stream_id, batch_id
+        ):
             if on_stats is not None:
                 on_stats(
                     {
@@ -1653,9 +1442,9 @@ def clusters_foreach_batch(
                 )
             return
         _check_threshold(cluster_store_root, threshold)
-        sig_cur = _resolve_store(signature_store_path)
-        sh_cur = _resolve_store(shingle_store_path)
-        gcur = _resolve_store(gpath_base)
+        sig_cur = resolve_store(signature_store_path)
+        sh_cur = resolve_store(shingle_store_path)
+        gcur = resolve_store(gpath_base)
         # collapse: only signable docs (>= 3 tokens) ever pair — the
         # group rows mirror that so remove_docs' star edges match LSH
         # semantics exactly

@@ -15,12 +15,8 @@ Index directory layout (parquet + one JSON sidecar):
                       costs whole Spark jobs (round-6 bench)
   lists/ (epoch 0),   the assigned corpus, parquet PARTITIONED BY
   lists-NNNNNN/       (version, cent_id): a probe join prunes to
-                      nprobe/nlists of ONE version's files. Each
-                      compaction writes a NEW epoch directory and
-                      publishes it via the meta sidecar (atomic flip);
-                      superseded epochs are retained for keep_epochs
-                      further compactions so in-flight probes never
-                      lose their files (Iceberg-style snapshot expiry)
+                      nprobe/nlists of ONE version's files; each
+                      compaction writes a NEW epoch directory
   sample_<seq>.parquet  the bounded TRAINING RESERVOIR: the TRAIN_CAP
                       corpus rows with the smallest (md5-bucket, vec_id)
                       seen so far — maintained incrementally (union the
@@ -29,6 +25,11 @@ Index directory layout (parquet + one JSON sidecar):
   _ivf_meta.json      {version, trained_on, appended_since_train,
                       base_cos, sample_seq, seq_committed,
                       last_batch_by_stream}
+
+Ledger, publication, retention and tombstones follow streaming/store.py.
+This store adds the per-generation centroid and PQ-codebook sidecars, a
+batch-less `seq` watermark beside the ledger, and a purge-on-retry
+`ingest=TAG` partition level in the lists store.
 
 Scale contract (the whole point):
   - append_batch touches |batch| rows (assignment is the broadcast-argmax
@@ -49,11 +50,10 @@ streaming/dedup.py.
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_rs_spark.operators.similarity import (
@@ -74,25 +74,28 @@ from cdc_rs_spark.operators.similarity import (
     _n_salt_buckets,
     cosine,
 )
+from cdc_rs_spark.streaming.store import (
+    append_tombstones,
+    drop_tombstoned,
+    expire_epochs,
+    ledger_commit,
+    ledger_done,
+    publish,
+    read_sidecar,
+    read_tombstones,
+    readmit_tombstones,
+    uncommitted_tags,
+    write_sidecar,
+)
 
 _META = "_ivf_meta.json"
 _CENTS = "centroids.json"
-
-
-def _meta_path(index_dir: str) -> str:
-    return os.path.join(index_dir, _META)
-
-
-def _read_meta(index_dir: str) -> dict:
-    with open(_meta_path(index_dir)) as f:
-        return json.load(f)
-
-
-def _write_meta(index_dir: str, meta: dict) -> None:
-    tmp = _meta_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, _meta_path(index_dir))
+_PQCB = "pq_codebooks.json"
+# epoch 0 keeps the pre-epoch name "lists"
+_LISTS_EPOCH = r"lists(?:-(\d+))?"
+# superseded reservoirs are deleted after each sidecar flip, or a long
+# stream would keep one TRAIN_CAP-row dir per micro-batch
+_SAMPLE_EPOCH = r"sample_(\d+)\.parquet"
 
 
 def _lists_path(index_dir: str, epoch: int) -> str:
@@ -104,33 +107,30 @@ def _lists_path(index_dir: str, epoch: int) -> str:
     )
 
 
-def _current_lists(index_dir: str) -> tuple[int, str]:
-    """Snapshot the live lists epoch from the meta sidecar (atomic file,
-    so this is a consistent point-in-time read)."""
-    epoch = int(_read_meta(index_dir).get("lists_epoch", 0))
-    return epoch, _lists_path(index_dir, epoch)
+def _lists_epoch(index_dir: str) -> int:
+    return int(read_sidecar(index_dir, _META).get("lists_epoch", 0))
 
 
 def current_lists_path(index_dir: str) -> str:
     """Public form for tests/tools: the directory the live epoch's rows
     are stored under."""
-    return _current_lists(index_dir)[1]
+    return _lists_path(index_dir, _lists_epoch(index_dir))
 
 
-def _epoch_dirs(index_dir: str) -> list[tuple[int, str]]:
-    import re
-
-    out = []
-    for name in os.listdir(index_dir):
-        # \d+ not \d{6}: {epoch:06d} PADS to 6 digits but never truncates,
-        # so epoch >= 10^6 writes 7+ digits — a {6} match would hide those
-        # directories from retention GC forever (round-7 review)
-        m = re.fullmatch(r"lists(?:-(\d+))?", name)
-        if m and os.path.isdir(os.path.join(index_dir, name)):
-            out.append(
-                (int(m.group(1) or 0), os.path.join(index_dir, name))
-            )
-    return sorted(out)
+def _probed_lists(
+    spark: SparkSession, index_dir: str, epoch: int, probe_rows: list
+) -> DataFrame:
+    """The snapshot epoch's lists with STATIC partition pruning: the
+    probed (version, cent_id) pairs are known driver-side, so they push
+    as a literal disjunction — the scan reads ONLY the probed
+    directories at any scale, with no reliance on dynamic partition
+    pruning kicking in."""
+    lists = spark.read.parquet(_lists_path(index_dir, epoch))
+    pred = None
+    for ver, cid in sorted({(r[0], r[1]) for r in probe_rows}):
+        leg = (F.col("version") == ver) & (F.col("cent_id") == cid)
+        pred = leg if pred is None else (pred | leg)
+    return lists if pred is None else lists.filter(pred)
 
 
 def _sample_path(index_dir: str, seq: int) -> str:
@@ -252,42 +252,40 @@ def _mean_assign_cos(sample_rows, cents) -> float:
         return total / len(sample_rows)
 
 
-def _cents_path(index_dir: str) -> str:
-    return os.path.join(index_dir, _CENTS)
+def _write_generations(
+    index_dir: str, name: str, load, rows: list, append: bool
+) -> None:
+    """Write a per-generation sidecar (centroids or PQ codebooks). On
+    append, any EXISTING rows with a version >= the incoming one are
+    dropped first: a crash between a retrain's sidecar append and its
+    meta commit leaves an orphan generation, and the retried retrain
+    must REPLACE it, not duplicate the version number."""
+    if append:
+        new_min = min(int(r["version"]) for r in rows)
+        rows = [r for r in load(index_dir) if int(r["version"]) < new_min] + rows
+    write_sidecar(index_dir, name, rows)
 
 
 def _write_cents(index_dir: str, rows: list, append: bool = False) -> None:
-    """rows: [{"version": v, "cent_id": id, "c_emb": [...]}] — written
-    tmp-then-replace like the meta sidecar. On append, any EXISTING rows
-    with a version >= the incoming one are dropped first: a crash between
-    a retrain's centroid append and its meta commit leaves an orphan
-    generation, and the retried retrain must REPLACE it, not duplicate
-    the version number (round-6 review #2)."""
-    if append:
-        new_min = min(int(r["version"]) for r in rows)
-        existing = [
-            r
-            for r in load_centroids(index_dir)
-            if int(r["version"]) < new_min
-        ]
-    else:
-        existing = []
-    out = existing + [
-        {
-            "version": int(r["version"]),
-            "cent_id": int(r["cent_id"]),
-            "c_emb": [float(x) for x in r["c_emb"]],
-        }
-        for r in rows
-    ]
-    tmp = _cents_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(out, f)
-    os.replace(tmp, _cents_path(index_dir))
+    """rows: [{"version": v, "cent_id": id, "c_emb": [...]}]."""
+    _write_generations(
+        index_dir,
+        _CENTS,
+        load_centroids,
+        [
+            {
+                "version": int(r["version"]),
+                "cent_id": int(r["cent_id"]),
+                "c_emb": [float(x) for x in r["c_emb"]],
+            }
+            for r in rows
+        ],
+        append,
+    )
 
 
 def load_centroids(index_dir: str, version: int | None = None) -> list:
-    if not os.path.exists(_cents_path(index_dir)) and os.path.isdir(
+    if not os.path.exists(os.path.join(index_dir, _CENTS)) and os.path.isdir(
         os.path.join(index_dir, "centroids.parquet")
     ):
         raise FileNotFoundError(
@@ -297,54 +295,37 @@ def load_centroids(index_dir: str, version: int | None = None) -> list:
             ".collect()]; cdc_rs_spark.streaming.ivf._write_cents("
             "index_dir, rows)"
         )
-    with open(_cents_path(index_dir)) as f:
-        rows = json.load(f)
+    rows = read_sidecar(index_dir, _CENTS)
     if version is not None:
         rows = [r for r in rows if int(r["version"]) == version]
     return rows
 
 
-_PQCB = "pq_codebooks.json"
-
-
-def _pqcb_path(index_dir: str) -> str:
-    return os.path.join(index_dir, _PQCB)
-
-
 def _write_pq_cb(index_dir: str, rows: list, append: bool = False) -> None:
-    """PQ codebook sidecar, one generation per centroid version — same
-    tmp-then-replace and replace-on-version-collision discipline as
-    _write_cents (a crashed retrain's orphan generation must be REPLACED
-    by the retry, never duplicated). rows: [{"version", "m", "code",
-    "c_sub", "n2"}]."""
-    if append:
-        new_min = min(int(r["version"]) for r in rows)
-        existing = [
-            r for r in load_pq_cb(index_dir) if int(r["version"]) < new_min
-        ]
-    else:
-        existing = []
-    out = existing + [
-        {
-            "version": int(r["version"]),
-            "m": int(r["m"]),
-            "code": int(r["code"]),
-            "c_sub": [float(x) for x in r["c_sub"]],
-            "n2": float(r["n2"]),
-        }
-        for r in rows
-    ]
-    tmp = _pqcb_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(out, f)
-    os.replace(tmp, _pqcb_path(index_dir))
+    """PQ codebook sidecar, one generation per centroid version. rows:
+    [{"version", "m", "code", "c_sub", "n2"}]."""
+    _write_generations(
+        index_dir,
+        _PQCB,
+        load_pq_cb,
+        [
+            {
+                "version": int(r["version"]),
+                "m": int(r["m"]),
+                "code": int(r["code"]),
+                "c_sub": [float(x) for x in r["c_sub"]],
+                "n2": float(r["n2"]),
+            }
+            for r in rows
+        ],
+        append,
+    )
 
 
 def load_pq_cb(index_dir: str, version: int | None = None) -> list:
-    if not os.path.exists(_pqcb_path(index_dir)):
+    if not os.path.exists(os.path.join(index_dir, _PQCB)):
         return []
-    with open(_pqcb_path(index_dir)) as f:
-        rows = json.load(f)
+    rows = read_sidecar(index_dir, _PQCB)
     if version is not None:
         rows = [r for r in rows if int(r["version"]) == version]
     return rows
@@ -406,20 +387,6 @@ def _purge_ingest(lists_path: str, ingest: str) -> None:
                 shutil.rmtree(tgt)
 
 
-def _gc_samples(index_dir: str, live_seq: int) -> None:
-    """Delete superseded reservoir directories (round-6 review: a
-    long-running stream would otherwise accumulate one TRAIN_CAP-row
-    parquet dir per micro-batch, unbounded). Runs AFTER the sidecar flip,
-    so a crash leaves at worst one stale extra dir."""
-    import re
-    import shutil
-
-    for name in os.listdir(index_dir):
-        m = re.match(r"sample_(\d+)\.parquet$", name)
-        if m and int(m.group(1)) < live_seq:
-            shutil.rmtree(os.path.join(index_dir, name))
-
-
 def _recover_lists(index_dir: str) -> None:
     """LEGACY heal only: pre-epoch builds compacted by renaming the live
     store aside (lists_old) and promoting a rewrite (lists_compact) in
@@ -432,7 +399,7 @@ def _recover_lists(index_dir: str) -> None:
     import shutil
 
     try:
-        if int(_read_meta(index_dir).get("lists_epoch", 0)) != 0:
+        if int(read_sidecar(index_dir, _META).get("lists_epoch", 0)) != 0:
             return  # epoch scheme: legacy swap dirs can no longer exist
     except FileNotFoundError:
         pass  # bootstrap crashed before the first meta write
@@ -550,7 +517,7 @@ def init_index(
         "pq_sub": ((dim // PQ_M) if dim else PQ_SUB) if pq else None,
         "pq_residual": bool(pq and residual),
     }
-    _write_meta(index_dir, meta)
+    write_sidecar(index_dir, _META, meta)
     return meta
 
 
@@ -603,17 +570,13 @@ def append_batch(
     Per-batch cost: |batch| + TRAIN_CAP rows. The lists store is NEVER
     read. Returns stats: {batch_rows, version, retrained, mean_cos}.
 
-    `batch_id` (foreachBatch's epoch) makes retries IDEMPOTENT (round-6
-    review: foreachBatch is at-least-once): a batch at or below its
-    stream's committed ledger line (`last_batch_by_stream`, round 7 —
-    required once compaction collapses committed ingest tags, whose
-    purge directories then no longer exist) or equal to the committed
-    `last_batch` is skipped outright, and a retry of a batch that
-    crashed mid-append first purges its own ingest partition directories
-    before re-appending — no duplicate vectors either way. Corollary for
-    direct callers: batch ids must be MONOTONIC per stream (foreachBatch
-    epochs are); re-submitting an older id is treated as a replay and
-    dropped, not re-indexed.
+    `batch_id` (foreachBatch's epoch) makes retries IDEMPOTENT: a batch
+    at or below its stream's ledger line, or equal to the legacy
+    committed `last_batch`, is skipped outright — compaction collapses
+    committed ingest tags, so a replay can no longer find them to purge
+    — and a retry of a batch that crashed mid-append first purges its
+    own ingest partition directories before re-appending. Batch ids must
+    be MONOTONIC per stream (foreachBatch epochs are).
     `stream_id` namespaces the tags: epoch ids RESET when a stream is
     restarted with a fresh checkpoint, and without a namespace the new
     run's batch 0 would purge the old run's committed batch-0 rows
@@ -622,7 +585,7 @@ def append_batch(
     if stream_id is not None:
         _validate_stream_id(stream_id)
     _recover_lists(index_dir)
-    meta = _read_meta(index_dir)
+    meta = read_sidecar(index_dir, _META)
     batch_key = (
         None if batch_id is None else f"{stream_id or 'b'}-{batch_id}"
     )
@@ -632,16 +595,9 @@ def append_batch(
     legacy_key = (
         None if batch_id is None else f"{stream_id or 'b'}:{batch_id}"
     )
-    # committed-batch LEDGER (round-7 review): one entry per stream with
-    # the highest committed batch id. It widens the skip-guard from "the
-    # very last batch" to "any batch at or below the stream's commit
-    # line" — required once compaction collapses committed ingest tags
-    # (below), because a replay of an older batch can no longer find its
-    # tag directories to purge and MUST be skipped instead.
-    ledger = meta.get("last_batch_by_stream") or {}
     if batch_key is not None and (
         meta.get("last_batch") in (batch_key, legacy_key)
-        or int(batch_id) <= int(ledger.get(stream_id or "b", -1))
+        or ledger_done(meta, stream_id or "b", batch_id)
     ):
         return {
             "batch_rows": 0,
@@ -714,8 +670,6 @@ def append_batch(
         # legacy layout, which was alias-unsafe by construction; new-form
         # tags are never affected.
         _purge_ingest(lists_path, f"{stream_id or 'b'}{batch_id}")
-    from pyspark.sql import Observation
-
     obs = Observation()  # batch count rides the write job (round 7)
     assigned = assigned.observe(obs, F.count(F.lit(1)).alias("n"))
     _append_lists(assigned, lists_path, version, ingest, n_parts=len(cents))
@@ -787,16 +741,13 @@ def append_batch(
         retrained = True
     if batch_key is not None:
         meta["last_batch"] = batch_key
-        led = dict(meta.get("last_batch_by_stream") or {})
-        skey = stream_id or "b"
-        led[skey] = max(int(led.get(skey, -1)), int(batch_id))
-        meta["last_batch_by_stream"] = led
+        ledger_commit(meta, stream_id or "b", batch_id)
     # persist the batch-less commit watermark: advance it on a batch-less
     # commit, and pin the legacy-inherited value on any other append so
     # the upgrade point can't drift with later sample_seq growth
     meta["seq_committed"] = tag_seq if batch_id is None else seq_committed
-    _write_meta(index_dir, meta)
-    _gc_samples(index_dir, new_seq)
+    write_sidecar(index_dir, _META, meta)
+    expire_epochs(index_dir, _SAMPLE_EPOCH, new_seq)
     return {
         "batch_rows": n,
         "version": meta["version"],
@@ -819,11 +770,11 @@ def _stable_snapshot(
     collapses sidecars strictly AFTER its epoch flip). Returns (epoch,
     cents_rows, pq_rows); pq_rows is [] unless with_pq."""
     for _ in range(8):
-        meta = _read_meta(index_dir)
+        meta = read_sidecar(index_dir, _META)
         epoch = int(meta.get("lists_epoch", 0))
         cents_rows = load_centroids(index_dir)
         pq_rows = load_pq_cb(index_dir) if with_pq else []
-        if int(_read_meta(index_dir).get("lists_epoch", 0)) == epoch:
+        if _lists_epoch(index_dir) == epoch:
             return epoch, cents_rows, pq_rows, meta
     # 8 compactions during 8 snapshot attempts: not a live race
     raise RuntimeError(
@@ -833,40 +784,12 @@ def _stable_snapshot(
     )
 
 
-def _tomb_path(index_dir: str) -> str:
-    """Resolve the live tombstone directory: readmit_vectors publishes a
-    rewritten set under a NEW versioned dir named by the meta's
-    `tomb_dir` key (atomic flip); 'tomb' is the default."""
-    try:
-        name = _read_meta(index_dir).get("tomb_dir") or "tomb"
-    except FileNotFoundError:
-        name = "tomb"
-    return os.path.join(index_dir, name)
-
-
 def tombstones(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The cumulative removed-vector set (round 10, VERDICT r9 next #1):
-    one skinny (vec_id) parquet dir, appended by remove_vectors. Probes
+    """The removed-vector set, appended by remove_vectors. Probes
     anti-join it BEFORE ranking (a removed vector must not occupy a
     top-k slot), and compact_index drops tombstoned rows from the
-    rewrite — the physical-erasure point. The set is retained after
-    compaction because superseded epochs (kept for in-flight probes,
-    keep_epochs cycles) still hold the rows; it is bounded by total
-    deletes, i.e. request-scale, never corpus-scale."""
-    p = _tomb_path(index_dir)
-    if not os.path.isdir(p):
-        return spark.createDataFrame([], "vec_id bigint")
-    return spark.read.schema("vec_id bigint").parquet(p)
-
-
-def _drop_tombstoned(df: DataFrame, spark: SparkSession, index_dir: str) -> DataFrame:
-    """Anti-join candidate rows against the tombstone set; a no-op scan-
-    free passthrough before the first removal."""
-    if not os.path.isdir(_tomb_path(index_dir)):
-        return df
-    return df.join(
-        F.broadcast(tombstones(spark, index_dir)), "vec_id", "left_anti"
-    )
+    rewrite — the physical-erasure point."""
+    return read_tombstones(spark, index_dir, _META, "vec_id")
 
 
 def remove_vectors(
@@ -886,19 +809,15 @@ def remove_vectors(
     disk until compact_index rewrites without them — the same
     tombstone-then-compact lifecycle as Lucene deletes or Iceberg
     delete files. WRITER-EXCLUSIVE like append_batch (run from the
-    ingest loop); replays of a committed delete batch are skipped by
-    the per-stream ledger line.
+    ingest loop).
 
     Re-adding a forgotten vec_id later is NOT automatic: the tombstone
     is a forget, not a version marker — an upsert stream should route
     deletes here only for true forgets and model updates as
     remove+append under a fresh vec_id."""
     _validate_stream_id(stream_id)
-    meta = _read_meta(index_dir)
-    ledger = meta.get("last_batch_by_stream") or {}
-    if batch_id is not None and int(batch_id) <= int(
-        ledger.get(stream_id, -1)
-    ):
+    meta = read_sidecar(index_dir, _META)
+    if ledger_done(meta, stream_id, batch_id):
         return {"n_removed": 0, "n_reservoir_purged": 0,
                 "skipped_duplicate": True}
     removed = removed.select(
@@ -906,9 +825,10 @@ def remove_vectors(
     ).distinct()
     # request-bounded collect: the id set drives the reservoir purge
     ids = {int(r["vec_id"]) for r in removed.collect()}
-    spark.createDataFrame(
-        [(i,) for i in sorted(ids)], "vec_id bigint"
-    ).write.mode("append").parquet(_tomb_path(index_dir))
+    append_tombstones(
+        spark.createDataFrame([(i,) for i in sorted(ids)], "vec_id bigint"),
+        index_dir, _META,
+    )
     # reservoir purge: rewrite the TRAIN_CAP-bounded sample minus the
     # forgotten ids under a NEW seq (atomic via the meta flip; the old
     # file is GC'd with the usual retention)
@@ -920,16 +840,12 @@ def remove_vectors(
     if n_purged:
         new_seq = seq + 1
         _write_sample_rows(index_dir, new_seq, kept)
-    meta = _read_meta(index_dir)  # publish point
+    publish(
+        index_dir, _META, key=stream_id, batch_id=batch_id,
+        sample_seq=new_seq,
+    )
     if n_purged:
-        meta["sample_seq"] = new_seq
-    if batch_id is not None:
-        led = dict(meta.get("last_batch_by_stream") or {})
-        led[stream_id] = max(int(led.get(stream_id, -1)), int(batch_id))
-        meta["last_batch_by_stream"] = led
-    _write_meta(index_dir, meta)
-    if n_purged:
-        _gc_samples(index_dir, new_seq)
+        expire_epochs(index_dir, _SAMPLE_EPOCH, new_seq)
     return {
         "n_removed": len(ids),
         "n_reservoir_purged": n_purged,
@@ -944,75 +860,20 @@ def readmit_vectors(
     batch_id: int | None = None,
     stream_id: str = "d",
 ) -> dict:
-    """TOMBSTONE-CLEAR / re-admit fold (round 11, VERDICT r10 next #3 —
-    the DMCA-counter-notice path): remove vec_ids from the tombstone set
-    so FUTURE appends under those ids index normally again. After
+    """TOMBSTONE-CLEAR / re-admit fold (the DMCA-counter-notice path):
+    remove vec_ids from the tombstone set so FUTURE appends under those
+    ids index normally again, ledgered under '{stream_id}!ra'. After
     compaction has physically erased the rows, this restores NOTHING by
     itself — re-ingestion via append_batch is the only way back, with
     exactly never-seen semantics; BEFORE compaction the still-on-disk
-    list rows become probe-visible again immediately (the counter-notice
-    fast path — the reservoir purge is not undone either way, so a
-    future re-train learns the vector only if it is re-appended).
-    Ledgered (a replayed clear is skipped) and
-    atomic: the surviving set writes to a NEW versioned dir and the
-    meta's tomb_dir flips in one replace. Clearing a never-tombstoned id
-    is a harmless no-op.
-
-    Ledger convention (ADVICE r11, low — unified with the cluster/span
-    readmit folds): the clear ledgers under its own '{stream_id}!ra'
-    line, never the append stream's, so a readmit batch id can never
-    advance the ingest replay gate. n_readmitted = tombstones actually
-    cleared, counted on the rewrite's single write action."""
-    from pyspark.sql import Observation
-
+    list rows become probe-visible again immediately (the reservoir
+    purge is not undone either way, so a future re-train learns the
+    vector only if it is re-appended)."""
     _validate_stream_id(stream_id)
-    meta = _read_meta(index_dir)
-    ledger = meta.get("last_batch_by_stream") or {}
-    key = f"{stream_id}!ra"
-    if batch_id is not None and int(batch_id) <= int(ledger.get(key, -1)):
-        return {"n_readmitted": 0, "n_tombstones_left": None,
-                "skipped_duplicate": True}
-    ids = readmitted.select(
-        F.col("vec_id").cast("bigint").alias("vec_id")
-    ).distinct()
-    marked = tombstones(spark, index_dir).distinct().join(
-        F.broadcast(ids.withColumn("__r", F.lit(True))), "vec_id", "left"
+    return readmit_tombstones(
+        spark, index_dir, _META, "vec_id", readmitted,
+        key=f"{stream_id}!ra", batch_id=batch_id,
     )
-    n = int(meta.get("tomb_seq", 0)) + 1
-    new_name = f"tomb-{n:06d}"
-    obs = Observation()
-    (
-        marked.observe(
-            obs,
-            F.count(F.lit(1)).alias("nb"),
-            F.count("__r").alias("nc"),
-        )
-        .filter(F.col("__r").isNull())
-        .select("vec_id")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(index_dir, new_name))
-    )
-    n_cleared = int(obs.get["nc"])
-    n_left = int(obs.get["nb"]) - n_cleared
-    old_tomb = _tomb_path(index_dir)
-    meta = _read_meta(index_dir)  # publish point
-    meta["tomb_dir"] = new_name
-    meta["tomb_seq"] = n
-    if batch_id is not None:
-        led = dict(meta.get("last_batch_by_stream") or {})
-        led[key] = max(int(led.get(key, -1)), int(batch_id))
-        meta["last_batch_by_stream"] = led
-    _write_meta(index_dir, meta)
-    if os.path.isdir(old_tomb) and os.path.basename(old_tomb) != new_name:
-        import shutil
-
-        shutil.rmtree(old_tomb, ignore_errors=True)
-    return {
-        "n_readmitted": n_cleared,
-        "n_tombstones_left": n_left,
-        "skipped_duplicate": False,
-    }
 
 
 def probe_index(
@@ -1046,9 +907,7 @@ def probe_index(
     left the new epoch's rows under a generation the stale centroid
     snapshot lacked, and the probe silently scanned nothing. A probe
     leg for a generation the epoch lacks still scans an empty partition
-    and contributes nothing; files never vanish mid-scan (superseded
-    epochs are retained for `keep_epochs` further compactions,
-    Iceberg-style snapshot expiry)."""
+    and contributes nothing."""
     _recover_lists(index_dir)
     epoch, cents_rows, _, _ = _stable_snapshot(index_dir)
     by_version: dict[int, list] = {}
@@ -1077,23 +936,12 @@ def probe_index(
         probe_rows,
         "version bigint, cent_id bigint, query_id bigint, q_emb array<float>",
     )
-    lists = spark.read.parquet(_lists_path(index_dir, epoch))
-    # STATIC partition pruning: the probed (version, cent_id) pairs are
-    # known driver-side (they were just computed), so push them as a
-    # literal disjunction — the scan reads ONLY the probed directories at
-    # any scale, with no reliance on dynamic partition pruning kicking in
-    pairs = sorted({(r[0], r[1]) for r in probe_rows})
-    pred = None
-    for ver, cid in pairs:
-        leg = (F.col("version") == ver) & (F.col("cent_id") == cid)
-        pred = leg if pred is None else (pred | leg)
-    if pred is not None:
-        lists = lists.filter(pred)
+    lists = _probed_lists(spark, index_dir, epoch, probe_rows)
     joined = lists.join(F.broadcast(probes), ["version", "cent_id"]).filter(
         F.col("vec_id") != F.col("query_id")
     )
     # removed vectors must not occupy top-k slots (round 10)
-    joined = _drop_tombstoned(joined, spark, index_dir)
+    joined = drop_tombstoned(joined, index_dir, _META, "vec_id")
     scored = joined.select(
         "query_id",
         "vec_id",
@@ -1213,13 +1061,7 @@ def probe_index_adc(
         "version bigint, cent_id bigint, query_id bigint, "
         "lut array<array<double>>, qnorm double, qc double",
     )
-    lists = spark.read.parquet(_lists_path(index_dir, epoch))
-    pairs = sorted({(r[0], r[1]) for r in probe_rows})
-    pred = None
-    for ver, cid in pairs:
-        leg = (F.col("version") == ver) & (F.col("cent_id") == cid)
-        pred = leg if pred is None else (pred | leg)
-    pruned = lists.filter(pred)
+    pruned = _probed_lists(spark, index_dir, epoch, probe_rows)
     joined = (
         pruned.select("version", "cent_id", "vec_id", "codes", "rnorm")
         .join(F.broadcast(probes), ["version", "cent_id"])
@@ -1228,7 +1070,7 @@ def probe_index_adc(
     # removed vectors leave the ADC shortlist too (round 10); the exact
     # re-rank below joins on the shortlist's vec_ids, so one filter here
     # covers both stages
-    joined = _drop_tombstoned(joined, spark, index_dir)
+    joined = drop_tombstoned(joined, index_dir, _META, "vec_id")
     short = pq_adc_rank(joined, cand, with_qc=pq_res)  # (query_id, vec_id)
     qdf = spark.createDataFrame(
         [
@@ -1305,11 +1147,8 @@ def probe_foreach_batch(
     it, so every probed partition is explained by a centroid the
     snapshot already had — a probe landing between an append and a
     retrain sees a consistent, possibly slightly stale, index; never a
-    torn one. The one rewriting operation, compact_index, publishes a
-    NEW epoch with an atomic meta flip and retains superseded epochs
-    for keep_epochs further compactions, so a probe mid-scan on the old
-    epoch keeps its files (the round-7 stress test pins exactly this
-    race).
+    torn one; compact_index's epoch retention keeps a mid-scan probe's
+    files.
 
     `check_pruning` keeps the per-batch plan assertion on (the r6 scale
     guard) — the probe never silently degrades to a full lists scan."""
@@ -1334,47 +1173,28 @@ def compact_index(
     keep_epochs: int = 2,
 ) -> int:
     """The DELIBERATE corpus rewrite: reassign every stored vector to the
-    LATEST centroid generation and rewrite the lists as one version. This
-    is the only operation here that scans the lists store — run it like a
-    table OPTIMIZE, not per batch. Returns the number of rows rewritten.
+    LATEST centroid generation and rewrite the lists as one version into
+    a new epoch. This is the only operation here that scans the lists
+    store — run it like a table OPTIMIZE, not per batch. Returns the
+    number of rows rewritten.
 
-    Publication is SNAPSHOT-ISOLATED from concurrent probes (the round-7
-    stress test caught the in-place swap racing a mid-scan probe into
-    FileNotFoundException): the rewrite lands in a brand-new epoch
-    directory, one atomic meta flip makes it live, the centroid sidecar
-    collapses AFTER the flip (so a probe that snapshotted the old epoch
-    still sees every generation its files need — see probe_index), and
-    superseded epochs are deleted only once they are `keep_epochs`
-    compactions old. A reader therefore has a whole compaction cycle (x
-    keep_epochs) to finish its scan — the same retention contract as
-    Iceberg's expire-snapshots, bought with keep_epochs extra corpus
-    copies on disk. Crash windows: before the flip, an orphan next-epoch
-    directory (overwritten by the retried compact); after it, at worst
-    uncollapsed centroids and un-GC'd epochs — all heal on the next
-    compact, no recovery rename dance.
+    The centroid sidecar collapses AFTER the epoch flip, so a probe that
+    snapshotted the old epoch still sees every generation its files need
+    (see probe_index). WRITER-EXCLUSIVE: a batch appended to the
+    superseded epoch during the rewrite would be absent from the
+    published one, and the centroid collapse would clobber a concurrent
+    retrain's commit. Run it from the ingest loop (ivf_foreach_batch
+    does) or with ingest paused.
 
-    WRITER-EXCLUSIVE: safe under concurrent PROBES (that is the epoch
-    scheme's whole point), but NOT under concurrent APPENDS — a batch
-    appended to the superseded epoch during the rewrite would be absent
-    from the published one, and the meta/centroid collapse would clobber
-    a concurrent retrain's commit. Run it from the ingest loop
-    (ivf_foreach_batch does) or with ingest paused, exactly like a table
-    OPTIMIZE.
-
-    Ingest-tag policy through the rewrite (round-7 review, both halves):
-    tags of COMMITTED batches (at or below their stream's ledger line,
-    plus init/compact and seq tags at or below the batch-less commit
-    watermark `seq_committed`) collapse into one 'compact'
-    partition — preserving every per-batch tag forever would leave the
-    compacted epoch with O(n_batches x n_centroids) directories and
-    probes opening thousands of tiny files, defeating the OPTIMIZE.
-    Tags ABOVE the commit line (a crashed append's residue, which a
-    retry will purge) and unparseable legacy tags are preserved, so the
-    retry's _purge_ingest still finds them in the new epoch; replays of
-    collapsed batches are skipped outright by append_batch's ledger
-    guard instead of relying on a purge."""
+    Ingest tags of COMMITTED batches (plus init/compact, and seq tags at
+    or below the batch-less watermark `seq_committed`) collapse into one
+    'compact' partition — keeping every per-batch tag would leave the
+    epoch with O(n_batches x n_centroids) tiny directories. Uncommitted
+    tags are preserved (store.uncommitted_tags), so a retry's
+    _purge_ingest still finds them; replays of collapsed batches are
+    skipped by append_batch's ledger guard instead."""
     _recover_lists(index_dir)
-    meta = _read_meta(index_dir)
+    meta = read_sidecar(index_dir, _META)
     version = int(meta["version"])
     epoch = int(meta.get("lists_epoch", 0))
     cents_rows = load_centroids(index_dir, version)
@@ -1389,7 +1209,7 @@ def compact_index(
     # 10): the new epoch is born clean; superseded epochs' copies expire
     # with the usual keep_epochs retention, so the tombstone set keeps
     # filtering probes until then
-    rows = _drop_tombstoned(rows, spark, index_dir)
+    rows = drop_tombstoned(rows, index_dir, _META, "vec_id")
     assigned = _assign_to_centroids(rows, cents_b, dim, keep=("ingest",))
     if bool(meta.get("pq")):
         # the rewrite reassigns every row to the LATEST generation, so
@@ -1411,33 +1231,13 @@ def compact_index(
     seq_committed = int(
         meta.get("seq_committed", meta.get("sample_seq", 0))
     )
-    ledger = meta.get("last_batch_by_stream") or {}
-    sid = F.regexp_extract("ingest", r"^(.+)-(\d+)$", 1)
-    bid = F.regexp_extract("ingest", r"^(.+)-(\d+)$", 2)
-    bid_i = F.when(bid != F.lit(""), bid.cast("bigint"))
-    if ledger:
-        commap = F.create_map(
-            *[
-                x
-                for k, v in sorted(ledger.items())
-                for x in (F.lit(k), F.lit(int(v)))
-            ]
-        )
-        committed = F.coalesce(F.element_at(commap, sid), F.lit(-1))
-    else:
-        committed = F.lit(-1)
-    keep_tag = (
-        F.when(F.col("ingest").isin("init", "compact"), F.lit(False))
-        .when(sid == F.lit(""), F.lit(True))  # legacy/unknown: preserve
-        .when(sid == F.lit("seq"), bid_i > F.lit(seq_committed))
-        .otherwise(bid_i > committed)
+    keep_tag = uncommitted_tags(
+        meta, "seq", seq_committed, base_tags=("init", "compact")
     )
     assigned = assigned.withColumn(
         "ingest", F.when(keep_tag, F.col("ingest")).otherwise(F.lit("compact"))
     )
     new_epoch = epoch + 1
-    from pyspark.sql import Observation
-
     obs = Observation()  # count rides the rewrite, no re-read job (r7)
     (
         assigned.observe(obs, F.count(F.lit(1)).alias("n"))
@@ -1450,12 +1250,7 @@ def compact_index(
         .parquet(_lists_path(index_dir, new_epoch))
     )
     n = int(obs.get["n"])
-    # re-read meta at the publish point: the rewrite is a long job, and
-    # flipping a dict read before it would revert anything committed since
-    # (belt-and-braces under the writer-exclusive contract above)
-    meta = _read_meta(index_dir)
-    meta["lists_epoch"] = new_epoch  # THE publish point (atomic replace)
-    _write_meta(index_dir, meta)
+    meta = publish(index_dir, _META, lists_epoch=new_epoch)
     # collapse centroid generations — strictly after the flip, so
     # (cents-then-epoch) probe snapshots can never pair collapsed
     # centroids with a pre-compact epoch. Generations NEWER than the
@@ -1484,12 +1279,7 @@ def compact_index(
             ],
             append=False,
         )
-    import shutil
-
-    # deferred GC: expire epochs superseded > keep_epochs compactions ago
-    for e, path in _epoch_dirs(index_dir):
-        if e < new_epoch - keep_epochs:
-            shutil.rmtree(path)
+    expire_epochs(index_dir, _LISTS_EPOCH, new_epoch - keep_epochs)
     return n
 
 

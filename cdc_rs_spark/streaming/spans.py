@@ -11,20 +11,15 @@ Two store layouts:
   LEGACY (round 7): one bare parquet directory of (span, doc_id) rows,
   append-only, pre-created by the caller. Kept working verbatim.
 
-  EPOCH'D (round 8, VERDICT r7 next #3 — the scheme is streaming/ivf.py's):
-  a root directory holding store-NNNNNN epoch subdirectories plus a
-  _span_meta.json sidecar {epoch, hashed, last_batch_by_stream}. Appends
+  EPOCH'D: a root directory holding store-NNNNNN epoch subdirectories
+  plus a _span_meta.json sidecar {epoch, hashed, last_batch_by_stream},
+  with streaming/store.py's ledger, publication and retention. Appends
   land in the live epoch; compact_span_store() rewrites the live epoch
-  DISTINCT into a NEW epoch directory and publishes it with one atomic
-  sidecar replace (tmp + os.replace), so a probe mid-scan on the old
-  epoch keeps its files; superseded epochs are retained for `keep_epochs`
-  further compactions (Iceberg-style snapshot expiry), then GC'd. The
-  sidecar also carries a per-stream committed-batch ledger: a replayed
-  batch id at or below its stream's ledger line still PROBES and
-  re-emits its report (at-least-once delivery downstream) but skips the
-  append, so replays don't grow the store; a crash between append and
-  ledger commit leaves duplicate rows, which existence semantics ignore
-  and the next compaction collapses.
+  DISTINCT into a NEW epoch. This store adds: a replayed batch id still
+  PROBES and re-emits its report (at-least-once delivery downstream) but
+  skips the append, and a crash between append and ledger commit leaves
+  duplicate rows, which existence semantics ignore and the next
+  compaction collapses.
 
 Keys (round 8): `hashed=True` stores (h1, h2, doc_id) instead of the raw
 40-char span — h1 = xxhash64(span), h2 = xxhash64(seed2, span), two
@@ -50,14 +45,24 @@ this is the EXTENSION family's streaming form.
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_rs_spark.operators.dedup import doc_spans
+from cdc_rs_spark.streaming.store import (
+    append_tombstones,
+    drop_tombstoned,
+    expire_epochs,
+    ledger_done,
+    publish,
+    read_sidecar,
+    readmit_tombstones,
+    read_tombstones,
+    write_sidecar,
+)
 
 _SPAN_META = "_span_meta.json"
 _H2_SEED = 0x5BD1E995  # any constant != xxhash64's default seed path
@@ -161,22 +166,6 @@ def probe_hashed_spans_against_store(
 # ---- epoch'd store (round 8) ------------------------------------------------
 
 
-def _span_meta_path(root: str) -> str:
-    return os.path.join(root, _SPAN_META)
-
-
-def _read_span_meta(root: str) -> dict:
-    with open(_span_meta_path(root)) as f:
-        return json.load(f)
-
-
-def _write_span_meta(root: str, meta: dict) -> None:
-    tmp = _span_meta_path(root) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, _span_meta_path(root))
-
-
 def _epoch_path(root: str, epoch: int) -> str:
     return os.path.join(root, f"store-{epoch:06d}")
 
@@ -190,7 +179,7 @@ def _store_schema(hashed: bool) -> str:
 
 
 def is_epoch_store(root: str) -> bool:
-    return os.path.exists(_span_meta_path(root))
+    return os.path.exists(os.path.join(root, _SPAN_META))
 
 
 def init_span_store(
@@ -200,33 +189,20 @@ def init_span_store(
     is returned as-is). The epoch-0 directory is written with the store
     schema so the first batch's read needs no special case."""
     if is_epoch_store(root):
-        return _read_span_meta(root)
+        return read_sidecar(root, _SPAN_META)
     os.makedirs(root, exist_ok=True)
     spark.createDataFrame([], _store_schema(hashed)).write.mode(
         "overwrite"
     ).parquet(_epoch_path(root, 0))
     meta = {"epoch": 0, "hashed": bool(hashed), "last_batch_by_stream": {}}
-    _write_span_meta(root, meta)
+    write_sidecar(root, _SPAN_META, meta)
     return meta
-
-
-def _span_tomb_path(root: str) -> str:
-    """Resolve the live tombstone directory (readmit publishes rewritten
-    sets under versioned dirs named by the meta's tomb_dir key)."""
-    try:
-        name = _read_span_meta(root).get("tomb_dir") or "tomb"
-    except FileNotFoundError:
-        name = "tomb"
-    return os.path.join(root, name)
 
 
 def span_tombstones(spark: SparkSession, root: str) -> DataFrame:
     """The cumulative removed-doc set — one skinny (doc_id) parquet dir.
     Bounded by total deletes."""
-    p = _span_tomb_path(root)
-    if not os.path.isdir(p):
-        return spark.createDataFrame([], "doc_id bigint")
-    return spark.read.schema("doc_id bigint").parquet(p)
+    return read_tombstones(spark, root, _SPAN_META, "doc_id")
 
 
 def remove_docs_from_span_store(
@@ -236,32 +212,22 @@ def remove_docs_from_span_store(
     batch_id: int | None = None,
     stream_id: str = "d",
 ) -> dict:
-    """CDC-delete fold for the span store (round 10, VERDICT r9 next
-    #1): a removed doc's windows must stop witnessing duplication —
-    probes are EXISTENCE-based (a span is 'duplicated' if another doc
-    holds it), so a forgotten doc's rows lingering in the store would
-    keep flagging other docs against content that no longer exists. The
-    fold appends the doc ids to the tombstone set (ledger-idempotent);
-    live_span_store anti-joins it from the next read, and the next
-    compaction drops the rows physically (the erasure point). Removal
-    by doc_id needs no span recompute — span rows are (key, doc_id)
-    facts, not a graph."""
-    meta = _read_span_meta(root)
-    ledger = meta.get("last_batch_by_stream") or {}
+    """CDC-delete fold for the span store: a removed doc's windows must
+    stop witnessing duplication — probes are EXISTENCE-based (a span is
+    'duplicated' if another doc holds it), so a forgotten doc's rows
+    lingering in the store would keep flagging other docs against
+    content that no longer exists. The doc ids join the tombstone set
+    under the '{stream_id}!rm' ledger line. Removal by doc_id needs no
+    span recompute — span rows are (key, doc_id) facts, not a graph."""
     key = f"{stream_id}!rm"
-    if batch_id is not None and int(batch_id) <= int(ledger.get(key, -1)):
+    if ledger_done(read_sidecar(root, _SPAN_META), key, batch_id):
         return {"n_removed": 0, "skipped_duplicate": True}
     removed = removed.select(
         F.col("doc_id").cast("bigint").alias("doc_id")
     ).distinct()
     n = removed.count()
-    removed.write.mode("append").parquet(_span_tomb_path(root))
-    meta = _read_span_meta(root)
-    if batch_id is not None:
-        led = dict(meta.get("last_batch_by_stream") or {})
-        led[key] = max(int(led.get(key, -1)), int(batch_id))
-        meta["last_batch_by_stream"] = led
-    _write_span_meta(root, meta)
+    append_tombstones(removed, root, _SPAN_META)
+    publish(root, _SPAN_META, key=key, batch_id=batch_id)
     return {"n_removed": int(n), "skipped_duplicate": False}
 
 
@@ -272,117 +238,50 @@ def readmit_docs_to_span_store(
     batch_id: int | None = None,
     stream_id: str = "d",
 ) -> dict:
-    """TOMBSTONE-CLEAR / re-admit fold (round 11, VERDICT r10 next #3):
-    remove doc ids from the tombstone set so future span folds may
-    re-index them. Restores no rows by itself (compaction erased them —
-    re-ingestion is the only way back, with never-seen semantics);
-    ledgered under its own '{stream}!ra' line (the convention the
-    cluster/IVF readmit folds adopted in round 12 — ADVICE r11, low);
-    published atomically via a versioned dir + one meta flip. Clearing a
-    never-tombstoned id is a no-op. n_readmitted = tombstones actually
-    cleared, counted on the rewrite's single write action."""
-    from pyspark.sql import Observation
-
-    meta = _read_span_meta(root)
-    ledger = meta.get("last_batch_by_stream") or {}
-    key = f"{stream_id}!ra"
-    if batch_id is not None and int(batch_id) <= int(ledger.get(key, -1)):
-        return {"n_readmitted": 0, "n_tombstones_left": None,
-                "skipped_duplicate": True}
-    ids = readmitted.select(
-        F.col("doc_id").cast("bigint").alias("doc_id")
-    ).distinct()
-    seq = int(meta.get("tomb_seq", 0)) + 1
-    new_name = f"tomb-{seq:06d}"
-    marked = span_tombstones(spark, root).distinct().join(
-        F.broadcast(ids.withColumn("__r", F.lit(True))), "doc_id", "left"
+    """TOMBSTONE-CLEAR / re-admit fold: remove doc ids from the tombstone
+    set so future span folds may re-index them, ledgered under
+    '{stream_id}!ra'. Restores no rows by itself (compaction erased
+    them — re-ingestion is the only way back, with never-seen
+    semantics)."""
+    return readmit_tombstones(
+        spark, root, _SPAN_META, "doc_id", readmitted,
+        key=f"{stream_id}!ra", batch_id=batch_id,
     )
-    obs = Observation()
-    (
-        marked.observe(
-            obs,
-            F.count(F.lit(1)).alias("nb"),
-            F.count("__r").alias("nc"),
-        )
-        .filter(F.col("__r").isNull())
-        .select("doc_id")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(root, new_name))
-    )
-    n_cleared = int(obs.get["nc"])
-    n_left = int(obs.get["nb"]) - n_cleared
-    old_tomb = _span_tomb_path(root)
-    meta = _read_span_meta(root)
-    meta["tomb_dir"] = new_name
-    meta["tomb_seq"] = seq
-    if batch_id is not None:
-        led = dict(meta.get("last_batch_by_stream") or {})
-        led[key] = max(int(led.get(key, -1)), int(batch_id))
-        meta["last_batch_by_stream"] = led
-    _write_span_meta(root, meta)
-    if os.path.isdir(old_tomb) and os.path.basename(old_tomb) != new_name:
-        import shutil
-
-        shutil.rmtree(old_tomb, ignore_errors=True)
-    return {
-        "n_readmitted": n_cleared,
-        "n_tombstones_left": n_left,
-        "skipped_duplicate": False,
-    }
 
 
 def live_span_store(spark: SparkSession, root: str) -> DataFrame:
-    """The live epoch's rows (consistent point-in-time read: the sidecar
-    replace is atomic, and superseded epochs are retained through
-    `keep_epochs` further compactions so a scan never loses files).
-    Tombstoned docs' rows are anti-joined out (round 10) — scan-free
-    before the first removal."""
-    meta = _read_span_meta(root)
+    """The live epoch's rows, tombstoned docs' rows anti-joined out
+    (scan-free before the first removal)."""
+    meta = read_sidecar(root, _SPAN_META)
     rows = spark.read.parquet(_epoch_path(root, int(meta["epoch"])))
-    if os.path.isdir(_span_tomb_path(root)):
-        rows = rows.join(
-            F.broadcast(span_tombstones(spark, root)), "doc_id", "left_anti"
-        )
-    return rows
+    return drop_tombstoned(rows, root, _SPAN_META, "doc_id")
 
 
 def compact_span_store(
     spark: SparkSession, root: str, keep_epochs: int = 2
 ) -> int:
-    """DISTINCT-rewrite the live epoch into a NEW epoch directory and
-    publish it with one atomic sidecar flip — bounding the store at its
-    distinct (key, doc_id) size no matter how many duplicate rows
-    replays and crash-retries appended. Superseded epochs are GC'd once
-    they are `keep_epochs` compactions old (a mid-scan reader has whole
-    compaction cycles to finish — streaming/ivf.py's retention
-    contract). WRITER-EXCLUSIVE like ivf's compact: run it from the
+    """DISTINCT-rewrite the live epoch into a NEW epoch — bounding the
+    store at its distinct (key, doc_id) size no matter how many
+    duplicate rows replays and crash-retries appended — and erase
+    tombstoned docs' rows on the way. WRITER-EXCLUSIVE: run it from the
     ingest loop (spans_foreach_batch's compact_every does) or with
-    ingest paused. Returns the distinct row count published.
-
-    Crash windows: before the flip, an orphan next-epoch directory
-    (overwritten by the retried compact); after it, at worst un-GC'd
-    epochs — both heal on the next compact."""
+    ingest paused. Returns the distinct row count published."""
     if not is_epoch_store(root):
         raise ValueError(
             f"{root} is a legacy bare-parquet span store; compaction "
             "requires the epoch'd layout (init_span_store). Migrate by "
             "writing its rows into a fresh epoch'd root."
         )
-    meta = _read_span_meta(root)
-    epoch = int(meta["epoch"])
+    epoch = int(read_sidecar(root, _SPAN_META)["epoch"])
     new_epoch = epoch + 1
-    from pyspark.sql import Observation
-
     obs = Observation()
-    rows = spark.read.parquet(_epoch_path(root, epoch)).distinct()
-    if os.path.isdir(_span_tomb_path(root)):
-        # physical erasure of tombstoned docs' rows rides the rewrite
-        # (round 10); the tombstone set keeps filtering reads of the
-        # retained superseded epochs until they expire
-        rows = rows.join(
-            F.broadcast(span_tombstones(spark, root)), "doc_id", "left_anti"
-        )
+    # physical erasure of tombstoned docs' rows rides the rewrite; the
+    # tombstone set keeps filtering reads of the retained superseded
+    # epochs until they expire
+    rows = drop_tombstoned(
+        spark.read.parquet(_epoch_path(root, epoch)).distinct(),
+        root, _SPAN_META, "doc_id",
+    )
     (
         rows.observe(obs, F.count(F.lit(1)).alias("n"))
         # overwrite clears a crashed prior attempt's residue (the dir is
@@ -391,19 +290,8 @@ def compact_span_store(
         .parquet(_epoch_path(root, new_epoch))
     )
     n = int(obs.get["n"])
-    # re-read at the publish point (belt-and-braces under the
-    # writer-exclusive contract: never revert a ledger line committed
-    # while the rewrite job ran)
-    meta = _read_span_meta(root)
-    meta["epoch"] = new_epoch
-    _write_span_meta(root, meta)
-    import re
-    import shutil
-
-    for name in os.listdir(root):
-        m = re.fullmatch(r"store-(\d+)", name)
-        if m and int(m.group(1)) < new_epoch - keep_epochs:
-            shutil.rmtree(os.path.join(root, name))
+    publish(root, _SPAN_META, epoch=new_epoch)
+    expire_epochs(root, r"store-(\d+)", new_epoch - keep_epochs)
     return n
 
 
@@ -420,20 +308,16 @@ def spans_foreach_batch(
     later duplicates of these docs) are caught.
 
     Store bootstrap: if `span_store_path` does not exist yet it is
-    created as an EPOCH'D store on the first batch (no caller pre-write
-    needed — round-8 review; the round-7 form raised AnalysisException
-    unless the caller pre-created an empty parquet store). A path that
-    already holds a legacy bare-parquet store keeps the legacy behavior
+    created as an EPOCH'D store on the first batch. A path that already
+    holds a legacy bare-parquet store keeps the legacy behavior
     verbatim: plain appends, `hashed`/`compact_every` must be off.
 
     Epoch'd extras: `compact_every=N` runs compact_span_store after
     every N appended batches (the DISTINCT-rewrite bounds the store
-    under replays); the sidecar ledger skips the APPEND of a replayed
-    batch id (at or below its stream's committed line) while still
-    emitting its report — existence semantics make the report identical
-    either way. `stream_id` namespaces ledger lines exactly like
-    streaming/ivf.py: point a FRESH checkpoint at an existing store with
-    a NEW stream_id, or its restarted batch 0 would be ledger-skipped.
+    under replays); a replayed batch id skips the APPEND but still
+    emits its report — existence semantics make the report identical
+    either way. Point a FRESH checkpoint at an existing store with a
+    NEW `stream_id`, or its restarted batch 0 would be ledger-skipped.
     """
     if compact_every is not None and compact_every < 1:
         raise ValueError("compact_every must be >= 1 or None")
@@ -470,18 +354,15 @@ def spans_foreach_batch(
         report = _probe_keyed(keyed, store, keys)
         if on_report is not None:
             on_report(report, batch_id)
-        ledger = meta.get("last_batch_by_stream") or {}
-        if int(batch_id) <= int(ledger.get(stream_id, -1)):
+        if ledger_done(meta, stream_id, batch_id):
             return  # replay: report re-emitted above, append skipped
         keyed.select(*keys, "doc_id").distinct().write.mode(
             "append"
         ).parquet(_epoch_path(span_store_path, int(meta["epoch"])))
-        meta = _read_span_meta(span_store_path)
-        led = dict(meta.get("last_batch_by_stream") or {})
-        led[stream_id] = max(int(led.get(stream_id, -1)), int(batch_id))
-        meta["last_batch_by_stream"] = led
-        meta["n_appends"] = int(meta.get("n_appends", 0)) + 1
-        _write_span_meta(span_store_path, meta)
+        meta = publish(
+            span_store_path, _SPAN_META,
+            key=stream_id, batch_id=batch_id, bump=("n_appends",),
+        )
         if compact_every is not None and meta["n_appends"] % compact_every == 0:
             compact_span_store(spark, span_store_path)
 

@@ -26,6 +26,12 @@ from cdc_rs_spark.streaming.clusters import (
     readmit_docs,
     remove_docs,
 )
+from cdc_rs_spark.streaming.store import read_sidecar, resolve_store
+
+
+def _read_meta(root):
+    return read_sidecar(root, "_cluster_meta.json")
+
 
 TEMPLATE = (
     "subscribe to our newsletter for the latest updates and offers "
@@ -209,9 +215,9 @@ def test_auto_compaction_bounds_delta_stack_over_110_batches(
             b,
         )
         max_depth = max(
-            max_depth, len(C._read_meta(root).get("deltas") or [])
+            max_depth, len(_read_meta(root).get("deltas") or [])
         )
-    meta = C._read_meta(root)
+    meta = _read_meta(root)
     assert max_depth <= 4, f"delta stack grew to {max_depth}"
     assert int(meta["base_epoch"]) >= 2, "the trigger fired < 2 times"
     got = _live(spark, root)
@@ -297,8 +303,6 @@ def test_group_append_failure_mid_fold_leaves_no_ledger_line(
     before the ledger commit. Kill the append mid-fold and assert the
     ledger line was NOT written (the batch is replayable), then that the
     retry heals to the never-crashed baseline."""
-    from cdc_rs_spark.streaming.clusters import _read_meta
-
     sig, sh, root = _mk_stores(spark, tmp_path, "ledger")
     fn = clusters_foreach_batch(sig, sh, root, threshold=0.5)
     state = _crash_on(monkeypatch, sig + "_groups")
@@ -325,19 +329,17 @@ def test_group_append_failure_mid_fold_leaves_no_ledger_line(
 def _store_multisets(spark, sig, sh, groups_path):
     from collections import Counter
 
-    from cdc_rs_spark.streaming.clusters import _resolve_store
-
     sig_rows = Counter(
         (r["doc_id"], r["band"], r["bkey"])
-        for r in spark.read.parquet(_resolve_store(sig)).collect()
+        for r in spark.read.parquet(resolve_store(sig)).collect()
     )
     sh_rows = Counter(
         (r["doc_id"], tuple(r["sh"]))
-        for r in spark.read.parquet(_resolve_store(sh)).collect()
+        for r in spark.read.parquet(resolve_store(sh)).collect()
     )
     g_rows = Counter(
         (r["gkey"], r["doc_id"], r["delegate"])
-        for r in spark.read.parquet(_resolve_store(groups_path)).collect()
+        for r in spark.read.parquet(resolve_store(groups_path)).collect()
     )
     return sig_rows, sh_rows, g_rows
 
@@ -410,7 +412,7 @@ def test_band_store_tiering_preserves_rows_and_bounds_files(
     assert _live(spark, t_root) == control_map
 
     for path in (t_sig, t_sh, t_sig + "_groups"):
-        resolved = C._resolve_store(path)
+        resolved = resolve_store(path)
         assert resolved != path, f"{path}: no compaction ever fired"
         n = _n_parquet_files(resolved)
         assert n < len(texts), (
@@ -425,8 +427,13 @@ def test_compact_band_store_hardlinks_large_files(
     carried into the new sibling by HARDLINK (same inode — zero bytes
     copied), while the small files merge; the row multiset is exact.
     Forces the SPARK-JOB merge arm (driver cap 0) — the other tiering
-    tests exercise the driver-side pyarrow arm."""
+    tests exercise the driver-side pyarrow arm. A copy of the store then
+    shows the arm is chosen on the small files' DECODED size (parquet
+    row-group total_byte_size), not their on-disk size."""
     import os
+    import shutil
+
+    import pyarrow.parquet as pq
 
     import cdc_rs_spark.streaming.clusters as C
 
@@ -452,8 +459,10 @@ def test_compact_band_store_hardlinks_large_files(
         and os.stat(os.path.join(p, n)).st_size >= 10_000
     ]
     assert len(big) == 1, "fixture needs exactly one over-bar file"
+    p2 = str(tmp_path / "hb_sig_gate")
+    shutil.copytree(p, p2)
     assert C._compact_band_store(spark, p, small_bytes=10_000, min_files=3)
-    resolved = C._resolve_store(p)
+    resolved = resolve_store(p)
     assert resolved != p
     after = {
         (r["doc_id"], r["band"], r["bkey"])
@@ -466,6 +475,86 @@ def test_compact_band_store_hardlinks_large_files(
     )
     # small files merged down: graduate + one consolidated file
     assert _n_parquet_files(resolved) == 2
+
+    def driver_merged(d):
+        return any("compact" in n for n in os.listdir(d))
+
+    assert not driver_merged(resolved), "cap 0 must take the Spark arm"
+    small = [
+        os.path.join(p2, n)
+        for n in os.listdir(p2)
+        if n.endswith(".parquet") and os.stat(os.path.join(p2, n)).st_size < 10_000
+    ]
+    on_disk = sum(os.stat(f).st_size for f in small)
+    decoded = 0
+    for f in small:
+        md = pq.ParquetFile(f).metadata
+        decoded += sum(
+            md.row_group(i).total_byte_size for i in range(md.num_row_groups)
+        )
+    assert decoded != on_disk
+    # a cap between the two sizes: the arm follows the decoded size
+    cap = min(decoded, on_disk)
+    monkeypatch.setattr(C, "BAND_COMPACT_DRIVER_BYTES", cap)
+    assert C._compact_band_store(spark, p2, small_bytes=10_000, min_files=3)
+    gated = resolve_store(p2)
+    assert driver_merged(gated) == (decoded <= cap)
+    assert {
+        (r["doc_id"], r["band"], r["bkey"])
+        for r in spark.read.parquet(gated).collect()
+    } == before
+
+
+def test_band_compaction_copies_when_hardlinks_fail(tmp_path, monkeypatch):
+    """On a mount without hardlinks (os.link raising EXDEV) the large file
+    is carried forward by copy: compaction completes and its rows equal
+    a hardlinked run's."""
+    import errno
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import cdc_rs_spark.streaming.clusters as C
+
+    linked = str(tmp_path / "linked")
+    os.makedirs(linked)
+    for i in range(3):
+        pq.write_table(
+            pa.table({"doc_id": [i], "band": [i], "bkey": [f"k{i}"]}),
+            os.path.join(linked, f"part-{i}.parquet"),
+        )
+    n = 4000
+    pq.write_table(
+        pa.table({
+            "doc_id": list(range(n)),
+            "band": [0] * n,
+            "bkey": [f"{i:032x}" for i in range(n)],
+        }),
+        os.path.join(linked, "part-big.parquet"),
+    )
+    copied = str(tmp_path / "copied")
+    shutil.copytree(linked, copied)
+
+    def big_ino(d):
+        return os.stat(os.path.join(d, "part-big.parquet")).st_ino
+
+    def rows(d):
+        return sorted(pq.read_table(d).to_pylist(), key=str)
+
+    ino = big_ino(linked)
+    assert C._compact_band_store(None, linked, small_bytes=10_000, min_files=3)
+    assert big_ino(resolve_store(linked)) == ino
+
+    def no_link(src, dst, **kw):
+        raise OSError(errno.EXDEV, "Invalid cross-device link", src)
+
+    monkeypatch.setattr(os, "link", no_link)
+    ino = big_ino(copied)
+    assert C._compact_band_store(None, copied, small_bytes=10_000, min_files=3)
+    assert big_ino(resolve_store(copied)) != ino, "large file must be a copy"
+    assert rows(resolve_store(copied)) == rows(resolve_store(linked))
 
 
 def test_band_compaction_crash_mid_rewrite_heals(
@@ -507,7 +596,7 @@ def test_band_compaction_crash_mid_rewrite_heals(
         # arm only once the sig store has a graduated (hardlinkable)
         # consolidated file, so the link loop actually runs
         if not state["fired"]:
-            resolved = C._resolve_store(sig)
+            resolved = resolve_store(sig)
             state["armed"] = any(
                 os.stat(os.path.join(resolved, n)).st_size >= 1500
                 for n in os.listdir(resolved)
@@ -526,8 +615,6 @@ def test_band_compaction_crash_mid_rewrite_heals(
     assert state["fired"], "crash never armed — fixture too small"
     assert crashed_at is not None
     # the crashed batch committed BEFORE compaction: its ledger line holds
-    from cdc_rs_spark.streaming.clusters import _read_meta
-
     assert int(
         (_read_meta(root).get("last_batch_by_stream") or {}).get("s", -1)
     ) == len(docs) - 1
@@ -540,7 +627,7 @@ def test_band_compaction_crash_mid_rewrite_heals(
         len(docs),
     )
     assert _live(spark, root) == {0: 0, 99: 0}
-    n_sig = spark.read.parquet(C._resolve_store(sig)).count()
+    n_sig = spark.read.parquet(resolve_store(sig)).count()
     from cdc_rs_spark.operators.dedup import MINHASH_BANDS
 
     assert n_sig == (len(docs) + 1) * MINHASH_BANDS

@@ -13,7 +13,6 @@ import random
 from pyspark.sql import functions as F
 
 from cdc_rs_spark.streaming.clusters import (
-    _read_meta,
     compact_cluster_store,
     fold_pairs,
     init_cluster_store,
@@ -22,6 +21,11 @@ from cdc_rs_spark.streaming.clusters import (
     remove_docs,
     tombstones,
 )
+from cdc_rs_spark.streaming.store import read_sidecar, resolve_store
+
+
+def _read_meta(root):
+    return read_sidecar(root, "_cluster_meta.json")
 
 
 def _pairs_df(spark, edges):
@@ -225,13 +229,11 @@ def test_purge_band_stores_erases_tombstoned_rows(spark, tmp_path):
     counts = purge_band_stores(spark, root, sig, sh)
     assert counts["sig_rows"] > 0
     # post-purge reads resolve through the atomic swap pointer (round 11)
-    from cdc_rs_spark.streaming.clusters import _resolve_store
-
     sig_ids = {
-        r["doc_id"] for r in spark.read.parquet(_resolve_store(sig)).collect()
+        r["doc_id"] for r in spark.read.parquet(resolve_store(sig)).collect()
     }
     sh_ids = {
-        r["doc_id"] for r in spark.read.parquet(_resolve_store(sh)).collect()
+        r["doc_id"] for r in spark.read.parquet(resolve_store(sh)).collect()
     }
     assert 2 not in sig_ids and 2 not in sh_ids
     assert sig_ids == {1, 3} and sh_ids == {1, 3}

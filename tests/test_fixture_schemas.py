@@ -14,6 +14,7 @@ import pytest
 
 from cdc_rs_spark.session import FIXTURE_SCHEMAS, load, table_path
 from cdc_rs_spark.sources.backfill import BackfillJob, plan_ranges, snapshot_table
+from cdc_rs_spark.streaming.store import resolve_store
 from tests.conftest import SF_DIR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -77,7 +78,6 @@ def test_cluster_store_schemas_match_inference(spark, tmp_path):
     from cdc_rs_spark.streaming.clusters import (
         _SH_SCHEMA,
         _SIG_SCHEMA,
-        _resolve_store,
         clusters_foreach_batch,
         init_cluster_store,
     )
@@ -92,7 +92,7 @@ def test_cluster_store_schemas_match_inference(spark, tmp_path):
     )
     clusters_foreach_batch(sig, sh, root, threshold=0.5)(docs, 0)
     for path, ddl in ((sig, _SIG_SCHEMA), (sh, _SH_SCHEMA)):
-        cur = _resolve_store(path)
+        cur = resolve_store(path)
         declared = spark.read.schema(ddl).parquet(cur).schema
         assert declared == spark.read.parquet(cur).schema, path
 

@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from cdc_rs_spark.streaming.additive import (
-    _read_meta,
     _seg_path,
     fold_segment,
     init_additive_store,
@@ -17,6 +16,11 @@ from cdc_rs_spark.streaming.additive import (
     rebuild_additive_store,
     retract_segment,
 )
+from cdc_rs_spark.streaming.store import read_sidecar
+
+
+def _read_meta(root):
+    return read_sidecar(root, "_add_meta.json")
 
 
 def _partial(spark, rows):

@@ -8,7 +8,12 @@ from pyspark.sql import functions as F
 
 from cdc_rs_spark.operators.skew import bucket_table, salted_join
 from cdc_rs_spark.session import load
+from cdc_rs_spark.streaming.store import read_sidecar
 from tests.conftest import SF_DIR
+
+
+def _read_meta(root):
+    return read_sidecar(root, "_cluster_meta.json")
 
 
 def _physical_plan(df) -> str:
@@ -1219,10 +1224,11 @@ def test_ivf_tombstone_filter_is_broadcast_anti_join(spark, tmp_path):
     tombstone set is delete-bounded) — a shuffled anti-join would add a
     corpus-sized exchange to every probe (SCALE.md §28)."""
     from cdc_rs_spark.streaming.ivf import (
-        _drop_tombstoned,
+        _META,
         remove_vectors,
         init_index,
     )
+    from cdc_rs_spark.streaming.store import drop_tombstoned
 
     index_dir = str(tmp_path / "idx")
     emb = spark.createDataFrame(
@@ -1233,7 +1239,7 @@ def test_ivf_tombstone_filter_is_broadcast_anti_join(spark, tmp_path):
     remove_vectors(
         spark, index_dir, spark.createDataFrame([(3,)], "vec_id bigint")
     )
-    filtered = _drop_tombstoned(emb, spark, index_dir)
+    filtered = drop_tombstoned(emb, index_dir, _META, "vec_id")
     plan = _physical_plan(filtered)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
@@ -1245,7 +1251,6 @@ def test_remove_docs_root_lookup_is_bucket_pruned(spark, tmp_path):
     from cdc_rs_spark.streaming.clusters import (
         _bucket,
         _raw_rows,
-        _read_meta,
         fold_pairs,
         init_cluster_store,
         compact_cluster_store,

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from cdc_rs_spark.operators.classify import nb_score, nb_train_weights
 from cdc_rs_spark.streaming.classifier import (
-    _read_meta,
     classifier_foreach_batch,
     compact_count_store,
     fold_counts,
@@ -19,6 +18,11 @@ from cdc_rs_spark.streaming.classifier import (
     read_counts,
     store_weights,
 )
+from cdc_rs_spark.streaming.store import read_sidecar
+
+
+def _read_meta(root):
+    return read_sidecar(root, "_add_meta.json")
 
 
 def _toks(spark, rows):

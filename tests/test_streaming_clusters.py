@@ -15,13 +15,17 @@ from pyspark.sql import functions as F
 
 from cdc_rs_spark.operators.graph import connected_components
 from cdc_rs_spark.streaming.clusters import (
-    _read_meta,
     clusters_foreach_batch,
     compact_cluster_store,
     fold_pairs,
     init_cluster_store,
     live_cluster_map,
 )
+from cdc_rs_spark.streaming.store import read_sidecar
+
+
+def _read_meta(root):
+    return read_sidecar(root, "_cluster_meta.json")
 
 
 def _pairs_df(spark, edges):
@@ -100,24 +104,24 @@ def test_crashed_fold_retry_heals(spark, tmp_path, monkeypatch):
     """Crash between the delta write and the sidecar publish: the orphan
     delta is invisible (meta never listed it), and the retry overwrites
     it deterministically — never a half-applied merge."""
-    import cdc_rs_spark.streaming.clusters as cl
+    import cdc_rs_spark.streaming.store as st
 
     root = str(tmp_path / "store")
     init_cluster_store(spark, root)
     fold_pairs(spark, root, _pairs_df(spark, [(5, 9)]), batch_id=0)
     before = _live(spark, root)
 
-    real_write = cl._write_meta
+    real_write = st.write_sidecar
     calls = {"n": 0}
 
-    def crashing_write(root_, meta_):
+    def crashing_write(root_, name_, meta_):
         calls["n"] += 1
         raise RuntimeError("injected crash before publish")
 
-    monkeypatch.setattr(cl, "_write_meta", crashing_write)
+    monkeypatch.setattr(st, "write_sidecar", crashing_write)
     with pytest.raises(RuntimeError, match="injected crash"):
         fold_pairs(spark, root, _pairs_df(spark, [(2, 5)]), batch_id=1)
-    monkeypatch.setattr(cl, "_write_meta", real_write)
+    monkeypatch.setattr(st, "write_sidecar", real_write)
     # orphan delta exists but is unpublished: the map is unchanged
     assert _live(spark, root) == before
     orphans = [d for d in os.listdir(root) if d.endswith("s-1")]

@@ -15,13 +15,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from cdc_rs_spark.streaming.ivf import (
-    _read_meta,
     append_batch,
     compact_index,
     init_index,
     ivf_foreach_batch,
     probe_index,
 )
+from cdc_rs_spark.streaming.store import read_sidecar
+
+
+def _read_meta(root):
+    return read_sidecar(root, "_ivf_meta.json")
+
 
 DIM = 4
 A = [1.0, 0.05, 0.0, 0.0]  # cluster A center
@@ -792,11 +797,12 @@ def test_epoch_dirs_sees_seven_digit_epochs(tmp_path):
     """Round-7 review: {epoch:06d} pads but never truncates, so epoch
     10^6 writes 7 digits — the retention GC's directory listing must
     still see it or every later compaction leaks a corpus copy."""
-    from cdc_rs_spark.streaming.ivf import _epoch_dirs, _lists_path
+    from cdc_rs_spark.streaming.ivf import _LISTS_EPOCH, _lists_path
+    from cdc_rs_spark.streaming.store import epoch_dirs
 
     for e in (0, 1, 999999, 1000000, 12345678):
         os.makedirs(_lists_path(str(tmp_path), e))
-    assert [e for e, _ in _epoch_dirs(str(tmp_path))] == [
+    assert [e for e, _ in epoch_dirs(str(tmp_path), _LISTS_EPOCH)] == [
         0, 1, 999999, 1000000, 12345678
     ]
 
@@ -866,7 +872,6 @@ def test_exactly_once_random_walk_across_compactions(spark, tmp_path):
     from cdc_rs_spark.streaming.ivf import (
         _append_lists,
         _lists_path,
-        _read_meta,
         current_lists_path,
         load_centroids,
     )

@@ -11,6 +11,12 @@ from cdc_rs_spark.streaming.spans import (
     probe_spans_against_store,
     spans_foreach_batch,
 )
+from cdc_rs_spark.streaming.store import read_sidecar
+
+
+def _read_meta(root):
+    return read_sidecar(root, "_span_meta.json")
+
 
 # a 60-char run shared as a PREFIX puts identical windows at positions
 # 1 and 11 of both docs (SPAN_LEN=40, SPAN_STRIDE=10); its length is a
@@ -178,7 +184,6 @@ def test_replays_bounded_by_ledger_and_compaction(spark, tmp_path):
     bounded at its distinct (key, doc_id) size."""
     from cdc_rs_spark.streaming.spans import (
         _epoch_path,
-        _read_span_meta,
         compact_span_store,
         live_span_store,
     )
@@ -199,7 +204,7 @@ def test_replays_bounded_by_ledger_and_compaction(spark, tmp_path):
     # appending the batch's keys directly, then compaction collapses them
     from cdc_rs_spark.streaming.spans import span_keys
 
-    meta = _read_span_meta(store_path)
+    meta = _read_meta(store_path)
     keyed, keys = span_keys(b1, hashed=False)
     for _ in range(2):
         keyed.select(*keys, "doc_id").distinct().write.mode("append").parquet(
@@ -216,7 +221,6 @@ def test_probe_equivalent_before_and_after_compaction(spark, tmp_path):
     epoch."""
     from cdc_rs_spark.streaming.spans import (
         _epoch_path,
-        _read_span_meta,
         compact_span_store,
         live_span_store,
         probe_spans_against_store,
@@ -227,7 +231,7 @@ def test_probe_equivalent_before_and_after_compaction(spark, tmp_path):
     fn = spans_foreach_batch(store_path)
     fn(_docs(spark, [(1, SHARED + UNIQUE1)]), 0)
     # inject replay duplicates straight into the live epoch
-    meta = _read_span_meta(store_path)
+    meta = _read_meta(store_path)
     keyed, keys = span_keys(_docs(spark, [(1, SHARED + UNIQUE1)]), False)
     keyed.select(*keys, "doc_id").distinct().write.mode("append").parquet(
         _epoch_path(store_path, int(meta["epoch"]))
@@ -278,16 +282,14 @@ def test_compact_every_policy_runs_inline(spark, tmp_path):
     """compact_every=2 compacts after every second appended batch (the
     in-loop OPTIMIZE policy, mirroring ivf_foreach_batch's
     compact_after_versions)."""
-    from cdc_rs_spark.streaming.spans import _read_span_meta
-
     store_path = str(tmp_path / "store")
     fn = spans_foreach_batch(store_path, compact_every=2)
     fn(_docs(spark, [(1, SHARED + UNIQUE1)]), 0)
-    assert int(_read_span_meta(store_path)["epoch"]) == 0
+    assert int(_read_meta(store_path)["epoch"]) == 0
     fn(_docs(spark, [(2, SHARED + UNIQUE2)]), 1)
-    assert int(_read_span_meta(store_path)["epoch"]) == 1
+    assert int(_read_meta(store_path)["epoch"]) == 1
     fn(_docs(spark, [(2, SHARED + UNIQUE2)]), 1)  # replay: no compact
-    assert int(_read_span_meta(store_path)["epoch"]) == 1
+    assert int(_read_meta(store_path)["epoch"]) == 1
 
 
 def test_anchor_store_probe_catches_shifted_copy(spark):
@@ -332,7 +334,6 @@ def test_remove_docs_stops_witnessing_and_compaction_erases(spark, tmp_path):
     the rows from the new epoch."""
     from cdc_rs_spark.streaming.spans import (
         _epoch_path,
-        _read_span_meta,
         compact_span_store,
         live_span_store,
         remove_docs_from_span_store,
@@ -376,7 +377,7 @@ def test_remove_docs_stops_witnessing_and_compaction_erases(spark, tmp_path):
     )["skipped_duplicate"]
     # compaction physically erases doc 1's rows from the new epoch
     compact_span_store(spark, store, keep_epochs=0)
-    meta = _read_span_meta(store)
+    meta = _read_meta(store)
     epoch_ids = {
         r["doc_id"]
         for r in spark.read.parquet(

@@ -103,13 +103,13 @@ def main() -> int:
 
     from cdc_rs_spark.streaming.clusters import (
         _GROUP_SCHEMA,
+        _META,
         _raw_union,
-        _read_meta,
-        _resolve_store,
         fold_pairs,
         init_cluster_store,
         tombstones,
     )
+    from cdc_rs_spark.streaming.store import read_sidecar, resolve_store
 
     root = tempfile.mkdtemp(prefix="pin_plan_")
     gcur = os.path.join(root, "groups")
@@ -120,7 +120,7 @@ def main() -> int:
     croot = os.path.join(root, "clusters")
     init_cluster_store(spark, croot, threshold=0.5)
     batch_gkeys = spark.createDataFrame([("g1",), ("g2",)], "gkey string")
-    gstore = spark.read.schema(_GROUP_SCHEMA).parquet(_resolve_store(gcur))
+    gstore = spark.read.schema(_GROUP_SCHEMA).parquet(resolve_store(gcur))
     live_del = (
         gstore.filter("delegate")
         .join(F.broadcast(batch_gkeys), "gkey")
@@ -157,7 +157,7 @@ def main() -> int:
         [(1, 2), (2, 3)], "id_a bigint, id_b bigint"
     )
     fold_pairs(spark, croot, pairs, batch_id=0)
-    meta = _read_meta(croot)
+    meta = read_sidecar(croot, _META)
     from cdc_rs_spark.streaming.clusters import (
         _apply_closure,
         _closure,
